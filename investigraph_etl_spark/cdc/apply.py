@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from investigraph_etl_spark import storage
 from investigraph_etl_spark.cdc.events import canonicalize_events
 from investigraph_etl_spark.cdc.resolve import resolve_lww
-from investigraph_etl_spark.lake.table import LakeTable, _bucket_expr
+from investigraph_etl_spark.lake.table import LakeTable, _bucket_expr, _physical_key
 
 _METRICS_DIR = "_metrics"
 _QUARANTINE_DIR = "_quarantine"
@@ -125,7 +125,7 @@ def apply_events_batch(
     # Fused one-exchange epoch (MOR, unsalted, low-duplication): pre-partition
     # the reduce by conv_id into a width dividing n_buckets, so the SAME
     # exchange serves the LWW aggregation AND routes every bucket wholly into
-    # one write task (murmur3 identity, lake/table.py _bucket_expr) — removes
+    # one write task (murmur3 identity, lake/table.py _bucket_sql) — removes
     # the second full-payload shuffle. The trade: the reduce happens after
     # the exchange, so map-side combine is lost; on high-duplication tails
     # the default combine-first shape shuffles ~dup× fewer rows and wins
@@ -262,9 +262,9 @@ def _apply_mor_one_action(
     written paths; quarantine + metrics + commit metrics all happen in the
     merge's pre-commit hook so they are durable before the epoch token is."""
     lin = Observation(f"lineage-{epoch_id}")
-    bucketed = resolved.withColumn("bucket", _bucket_expr(st.n_buckets)).observe(
-        lin, _lineage_agg(st.n_buckets)
-    )
+    bucketed = resolved.withColumn(
+        "bucket", _bucket_expr(st.n_buckets, _physical_key(st))
+    ).observe(lin, _lineage_agg(st.n_buckets))
     side: dict[str, Any] = {}
 
     def pre_commit() -> dict[str, Any]:
@@ -322,7 +322,7 @@ def _apply_two_action(
     resolved = resolved.cache()
     try:
         per_bucket = (
-            resolved.withColumn("bucket", _bucket_expr(st.n_buckets))
+            resolved.withColumn("bucket", _bucket_expr(st.n_buckets, _physical_key(st)))
             .groupBy("bucket")
             .agg(
                 F.sum("_cnt").alias("events_applied"),

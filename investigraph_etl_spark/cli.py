@@ -14,7 +14,7 @@ Usage (``python -m investigraph_etl_spark.cli <cmd> ...``)::
     vacuum   --table DIR              # reclaim unreferenced data files
     metadata --table DIR              # write + print index.json (O23)
     read     --table DIR [--where "col>=v" ...] [-n N]
-                                      # zone-map-pruned read (JSONL rows)
+                                      # zone-map/bucket-pruned read (JSONL rows)
     changes  --table DIR --since V [--to V]
                                       # incremental changelog (CDC out, JSONL)
     fetch    --url URL [--cache-dir]  # conditional HTTP fetch (O2; no Spark)
@@ -106,7 +106,8 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--table", required=True)
     sp.add_argument("--where", action="append", default=[],
                     help="col<op>value predicate (repeatable, AND-ed); "
-                         "ops: = < <= > >=")
+                         "ops: = < <= > >=. Files are pruned by zone maps; "
+                         "conv_id=v also reads only v's bucket")
     sp.add_argument("-n", "--limit", type=int, default=None)
 
     sp = sub.add_parser("changes")

@@ -8,11 +8,16 @@ Physical layout::
 Key design decisions, each driven by 100 TB scale:
 
 - **Hash-bucketed by conv_id** (``pmod(murmur3(conv_id), n_buckets)`` —
-  Spark's shuffle hash, see ``_bucket_expr`` for why): a
+  Spark's shuffle hash, see ``_bucket_sql`` for why): a
   MERGE reads and rewrites ONLY the buckets its batch touches — file-level
   partition pruning without a metastore. A micro-batch touching 1% of
   conversations rewrites ~1% of the table, not all of it. turn_idx stays
   inside the bucket so a whole conversation is co-located.
+- **Bucket pruning**: every generation of a key sits in the key's bucket, so
+  ``read(where=[("conv_id", "=", k)])`` keeps only the files of bucket
+  ``pmod(murmur3(k), n_buckets)`` (the ``n_buckets`` of the version read) —
+  a point lookup scans ~1/n_buckets of the table, MOR-safe for the same
+  reason key zone maps are.
 - **LWW state lives in the table** as hidden columns ``_ts``/``_seq``/
   ``_deleted``: cross-epoch conflicts (late update after delete, duplicate
   epochs) resolve by comparing stamps, so the MERGE is a pure idempotent
@@ -55,7 +60,7 @@ import time
 import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -82,21 +87,40 @@ _COMMIT_COL = "commit"  # physical partition dir column naming the write
 #: function is part of the persisted format — writing murmur3 buckets into
 #: an xxhash64-era layout would leave two live rows per key (COW merge only
 #: reads the buckets IT computes as touched) and mis-prune reads. Bump the
-#: suffix if the expression in ``_bucket_expr`` ever changes.
+#: suffix if the expression in ``_bucket_sql`` ever changes.
 BUCKET_FN = "murmur3_pmod_v1"
 
 
-def _bucket_expr(n_buckets: int):
-    """Bucket of a row = ``pmod(murmur3(conv_id), n_buckets)``.
+def _bucket_sql(n_buckets: int, key: str = "conv_id") -> str:
+    """Bucket of a key = ``pmod(murmur3(key), n_buckets)`` — THE key→bucket
+    rule, as a SQL expression over ``key`` (a column name or SQL
+    expression, default ``conv_id``). The writer, the COW touched set and
+    read pruning all go through it (``_bucket_expr`` is its Column face).
+    ``key`` must carry the table's PHYSICAL conv_id type
+    (``_physical_key``): murmur3 hashes the value's binary form, so an int
+    5 and the string ``'5'`` land in different buckets.
 
-    Murmur3 (``F.hash``) deliberately matches Spark's own HashPartitioning
+    Murmur3 (``hash``) deliberately matches Spark's own HashPartitioning
     hash: ``repartition(P, "conv_id")`` routes a row to partition
     ``pmod(murmur3(conv_id), P)``, so whenever ``P`` divides ``n_buckets``
     every bucket lands wholly inside one task (``H mod n ≡ b ⇒ H mod P =
     b mod P``). That identity is what lets the ingest hot path resolve and
     write in ONE exchange (see ``apply_events_batch``) while still emitting
     exactly one file per touched bucket."""
-    return F.pmod(F.hash(F.col("conv_id")), F.lit(n_buckets)).cast("int")
+    return f"cast(pmod(hash({key}), {int(n_buckets)}) as int)"
+
+
+def _bucket_expr(n_buckets: int, key: str = "conv_id") -> Column:
+    """``_bucket_sql`` as a Column."""
+    return F.expr(_bucket_sql(n_buckets, key))
+
+
+def _physical_key(st) -> str:
+    """SQL for ``conv_id`` cast to table state ``st``'s PHYSICAL conv_id
+    type — the bucket rule's input for rows not yet in table form
+    (canonical events)."""
+    dtype = T.StructType.fromJson(st.schema)["conv_id"].dataType
+    return f"cast(conv_id as {dtype.simpleString()})"
 
 
 def _bucket_of(rel_path: str) -> int | None:
@@ -192,7 +216,8 @@ class LakeTable:
 
         ``keyset_col``: opt-in key-membership skipping for point lookups.
         Zone maps cannot prune ``conv_id = x`` — hash-distributed keys span
-        ~the full min/max range in every file — so each write additionally
+        ~the full min/max range in every file — and bucket pruning still
+        keeps every file generation of x's bucket, so each write additionally
         records a per-file key bitmap (``keyset_bits`` wide, default 2 KB in
         the log; see lake/stats.py pack_keyset) that ``read(where=[(col,
         "=", v)])`` uses to keep only files that may contain the key, and
@@ -332,37 +357,40 @@ class LakeTable:
         df = df.drop(_COMMIT_COL)
         return df if with_bucket else df.drop(_BUCKET_COL)
 
-    def _collect_stats(
-        self,
-        added: list[str],
-        stats_cols: list[str],
-        keyset: dict[str, Any] | None = None,
-    ) -> dict:
+    def _collect_stats(self, added: list[str], st) -> dict:
         """Zone maps for freshly written files: one parquet-footer read per
         file through the storage interface (ranged GETs — O(KB) per file,
         driver-side, same cost class as the manifest LIST). Recorded in the
         commit so ``read(where=...)`` can skip files without data-plane I/O.
 
-        When the table has a ``keyset`` config, each file additionally gets
-        its key-membership bitmap (one extra column-pruned Spark pass over
-        the files just written — O(batch), opt-in at create)."""
+        When the table (state ``st``) has a ``keyset`` config, each file
+        additionally gets its key-membership bitmap (one extra column-pruned
+        Spark pass over the files just written — O(batch), opt-in at
+        create)."""
         out: dict = {}
-        if stats_cols and added:
-            out = collect_file_stats(self.fs, self.data_dir, added, stats_cols)
-        if keyset and added:
-            for rel, entry in self._collect_keysets(added, keyset).items():
+        if st.stats_cols and added:
+            out = collect_file_stats(self.fs, self.data_dir, added, st.stats_cols)
+        if st.keyset and added:
+            # the keyset column is frozen (never widened), so the state's
+            # type is the type every added file was written with
+            dtype = T.StructType.fromJson(st.schema)[st.keyset["col"]].dataType
+            for rel, entry in self._collect_keysets(added, st.keyset, dtype).items():
                 out.setdefault(rel, {})[KEYSET_KEY] = entry
         return out
 
-    def _collect_keysets(self, added: list[str], ks: dict[str, Any]) -> dict:
+    def _collect_keysets(
+        self, added: list[str], ks: dict[str, Any], dtype: T.DataType
+    ) -> dict:
         """Per-file key bitmaps for freshly written files: ONE aggregation
         over just those files, reading only the key column (column-pruned
         scan), grouped by source file — the per-commit cost of membership
-        skipping."""
+        skipping. The one-column schema is given, not inferred: inference
+        would cost a Spark job of its own per commit."""
         n_bits = int(ks["bits"])
         paths = [join(self.data_dir, rel) for rel in added]
         rows = (
-            self.spark.read.parquet(*paths)
+            self.spark.read.schema(T.StructType([T.StructField(ks["col"], dtype)]))
+            .parquet(*paths)
             .select(
                 F.input_file_name().alias("_f"),
                 F.pmod(F.xxhash64(F.col(ks["col"])), F.lit(n_bits))
@@ -380,21 +408,6 @@ class LakeTable:
                 out[rel] = {"n": n_bits, "b64": pack_keyset(r._bits, n_bits)}
         return out
 
-    def _keyset_bit(self, value: Any, n_bits: int, dtype: T.DataType) -> int:
-        """Bitmap position of a lookup literal — computed BY Spark so it is
-        bit-identical to the write-side ``xxhash64`` (a 1-row driver job).
-        The literal is cast to the keyset COLUMN's type first: xxhash64 is
-        type-width-sensitive, so e.g. an int literal against a string/long
-        column would otherwise hash to the wrong bit and silently prune
-        files that contain the key."""
-        return (
-            self.spark.range(1)
-            .select(
-                F.pmod(F.xxhash64(F.lit(value).cast(dtype)), F.lit(n_bits)).cast("int")
-            )
-            .first()[0]
-        )
-
     def _prune_spec(self, st) -> tuple[set, set]:
         """(fully-prunable cols, monotone-only cols) for this table's mode.
 
@@ -411,19 +424,52 @@ class LakeTable:
         return prunable & set(st.key_cols), monotone
 
     def _pruned_files(self, st, preds) -> tuple[list[str], int]:
-        """Zone-map pruning, then key-membership pruning for ``=`` predicates
-        on the keyset column (both MOR-safe; lake/stats.py for the proofs)."""
+        """Zone-map pruning, then bucket pruning for ``conv_id = k`` and
+        key-membership pruning for ``=`` on the keyset column (all MOR-safe:
+        each drops a key's generations all together or not at all;
+        lake/stats.py for the proofs)."""
         prunable, monotone = self._prune_spec(st)
         files, n = prune_files(st.live_files, st.file_stats, preds, prunable, monotone)
-        if st.keyset:
-            col, bits = st.keyset["col"], int(st.keyset["bits"])
-            dtype = T.StructType.fromJson(st.schema)[col].dataType
-            for pcol, op, val in preds:
-                if pcol == col and op == "=" and val is not None:
-                    files, n2 = prune_files_keyset(
-                        files, st.file_stats, self._keyset_bit(val, bits, dtype)
-                    )
-                    n += n2
+        schema = T.StructType.fromJson(st.schema)
+        ks_col = st.keyset["col"] if st.keyset else None
+        # Each `=` literal is read in its column's PHYSICAL type: both hashes
+        # are type-sensitive, so e.g. an int literal against a string column
+        # would otherwise hash to the wrong bucket/bit and prune files that
+        # hold the key. A literal that does not cast (null) prunes nothing.
+        args: dict[str, Any] = {}
+        hashes: list[tuple[str, str]] = []  # (kind, SQL over a literal)
+        for pcol, op, val in preds:
+            bucketed = pcol == "conv_id" and st.n_buckets > 1
+            if op != "=" or val is None or not (bucketed or pcol == ks_col):
+                continue
+            k = f"k{len(args)}"
+            args[k] = val
+            lit = f"try_cast(:{k} as {schema[pcol].dataType.simpleString()})"
+            if bucketed:
+                h = _bucket_sql(st.n_buckets, lit)
+                hashes.append(("bucket", f"if({lit} is null, null, {h})"))
+            if pcol == ks_col:
+                h = f"pmod(xxhash64({lit}), {int(st.keyset['bits'])})"
+                hashes.append(("keyset", f"if({lit} is null, null, {h})"))
+        if not hashes:
+            return files, n
+        # ONE 1-row select computes every bucket and bit BY Spark, so they
+        # are bit-identical to the write side's murmur3/xxhash64. Over a
+        # VALUES row the optimizer folds it to constants on the driver: no
+        # Spark job per lookup.
+        row = self.spark.sql(
+            f"SELECT {', '.join(h for _, h in hashes)} FROM VALUES (0)", args=args
+        ).first()
+        for (kind, _), h in zip(hashes, row):
+            if h is None:
+                continue
+            if kind == "bucket":
+                kept = [f for f in files if _bucket_of(f) in (h, None)]
+                n += len(files) - len(kept)
+                files = kept
+            else:
+                files, n2 = prune_files_keyset(files, st.file_stats, h)
+                n += n2
         return files, n
 
     def files_for(
@@ -431,8 +477,9 @@ class LakeTable:
         where: list[tuple[str, str, Any]] | None = None,
         at_version: int | None = None,
     ) -> tuple[list[str], int]:
-        """(files read(where=...) would scan, number pruned by zone maps and
-        key bitmaps) — the observability/test surface for data skipping."""
+        """(files read(where=...) would scan, number pruned by zone maps,
+        buckets and key bitmaps) — the observability/test surface for data
+        skipping."""
         st = self._state(at_version)
         if not where:
             return list(st.live_files), 0
@@ -466,12 +513,15 @@ class LakeTable:
 
         ``where``: AND-ed simple predicates ``[(col, op, literal), ...]``
         (ops ``= < <= > >=``). Files whose recorded zone maps prove no match
-        are skipped BEFORE the scan (lake/stats.py); the predicate is then
-        also applied as a normal Spark filter, so the result is identical to
-        filtering a full read — stats only remove I/O. On MOR tables only
-        key-column predicates prune files (a payload bound could drop the
-        LWW winner while keeping a stale loser); payload predicates still
-        filter, post-reduction.
+        are skipped BEFORE the scan (lake/stats.py); ``conv_id = k`` further
+        keeps only the files of k's bucket (under the ``n_buckets`` of the
+        version read, so time travel across ``rebucket()`` prunes right),
+        and ``=`` on a keyset column only files whose key bitmap may hold
+        the literal. The predicate is then also applied as a normal Spark
+        filter, so the result is identical to filtering a full read —
+        pruning only removes I/O. On MOR tables only key-column predicates
+        prune files (a payload bound could drop the LWW winner while keeping
+        a stale loser); payload predicates still filter, post-reduction.
         """
         st = self._state(at_version)
         schema = T.StructType.fromJson(st.schema)
@@ -843,7 +893,7 @@ class LakeTable:
         ``aligned_parts``: the batch is ALREADY hash-partitioned by conv_id
         into this many partitions (a divisor of n_buckets), so the MOR write
         can skip its own repartition — the fused one-exchange ingest path
-        (see ``_bucket_expr``). Ignored (safe fallback to the normal write
+        (see ``_bucket_sql``). Ignored (safe fallback to the normal write
         shuffle) when the divisibility no longer holds, e.g. after a raced
         rebucket.
 
@@ -902,15 +952,11 @@ class LakeTable:
         physical = self._evolve_schema(current, payload_types, frozen)
         payload_names = [f.name for f in physical.fields if f.name not in {*KEY_COLS, "ts", *HIDDEN_COLS}]
 
-        batch = resolved.withColumn(_BUCKET_COL, _bucket_expr(st.n_buckets))
-        if touched is None and st.mode != "mor":
-            touched = [r[0] for r in batch.select(_BUCKET_COL).distinct().collect()]
-
         # Enforce the physical schema on every batch column (callers may hand
         # pandas-inferred wider types, e.g. int64 turn_idx). One selectExpr:
         # per-micro-batch driver cost, see canonicalize_events.
-        in_batch = set(batch.columns)
-        batch_ev = batch.selectExpr(
+        in_batch = set(resolved.columns)
+        batch_ev = resolved.selectExpr(
             "cast(op as string) as op",
             *[
                 f"cast(`{k}` as {physical[k].dataType.simpleString()}) as `{k}`"
@@ -924,6 +970,10 @@ class LakeTable:
             "cast(ts as timestamp) as ts",
             "cast(seq as long) as seq",
         )
+        if touched is None and st.mode != "mor":
+            # from the PHYSICAL-typed key: the buckets the rows are written to
+            buckets = batch_ev.select(_bucket_expr(st.n_buckets)).distinct()
+            touched = [r[0] for r in buckets.collect()]
 
         if st.mode == "mor":
             # Merge-on-read: append the resolved batch as a new generation —
@@ -968,7 +1018,7 @@ class LakeTable:
                 extra_metrics = extra_metrics()
         metrics = {"buckets_touched": len(touched), **(extra_metrics or {})}
         with phase("stats"):
-            stats = self._collect_stats(added, st.stats_cols, st.keyset)
+            stats = self._collect_stats(added, st)
         commit = Commit(
             version=st.version + 1,
             added=added,
@@ -1035,6 +1085,7 @@ class LakeTable:
         blanked payload (so a stale update can never resurrect a turn).
         """
         # One selectExpr: per-micro-batch driver cost, see canonicalize_events.
+        # ``events`` already carries the physical key types.
         return events.selectExpr(
             *KEY_COLS,
             *[
@@ -1045,7 +1096,7 @@ class LakeTable:
             "ts as _ts",
             "seq as _seq",
             "op = 'delete' as _deleted",
-            f"cast(pmod(hash(conv_id), {int(n_buckets)}) as int) as {_BUCKET_COL}",
+            f"{_bucket_sql(n_buckets)} as {_BUCKET_COL}",
         )
 
     # ------------------------------------------------------------- compaction
@@ -1106,7 +1157,7 @@ class LakeTable:
             added=added,
             removed=files,
             metrics={"compaction": True, "buckets": len(buckets)},
-            stats=self._collect_stats(added, st.stats_cols, st.keyset),
+            stats=self._collect_stats(added, st),
         )
 
         def revalidate(new_st) -> Commit:
@@ -1191,7 +1242,7 @@ class LakeTable:
             # "compaction" marks it physical-only for every changelog
             # classifier; "rebucket" records the layout change for history
             metrics={"compaction": True, "rebucket": n_buckets},
-            stats=self._collect_stats(added, st.stats_cols, st.keyset),
+            stats=self._collect_stats(added, st),
             # rebucket recomputes every bucket with the CURRENT function, so
             # it is also the migration path for unstamped/foreign layouts
             bucket_fn=BUCKET_FN,
@@ -1263,7 +1314,7 @@ class LakeTable:
             app_id=app_id,
             epoch_id=epoch_id,
             metrics=metrics or {},
-            stats=self._collect_stats(added, st.stats_cols, st.keyset),
+            stats=self._collect_stats(added, st),
         )
 
         def revalidate(new_st) -> Commit:

@@ -69,6 +69,10 @@ BENCH_CONF: dict[str, str] = {
 }
 
 
+#: Listing-job width knob, set by :func:`get_spark` from the live cluster.
+LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+
+
 def get_spark(
     app_name: str = "investigraph-etl-spark",
     master: str | None = None,
@@ -79,6 +83,15 @@ def get_spark(
     ``master`` defaults to ``local[N]`` with ``N = $SPARK_GRAFT_CPUS`` (or all
     cores). On a real cluster, pass ``None`` and let spark-submit supply the
     master; the engine is deployable via ``spark-submit --py-files``.
+
+    Unless ``conf`` sets it, the listing parallelism is clamped to 2× the
+    cluster's ``defaultParallelism`` — the same clamp ``LakeTable`` applies
+    to write tasks. The lake reads explicit file paths from its commit log;
+    past 32 paths Spark stats them in a listing job with one task per path
+    (Spark's default cap is 10,000), so unclamped a 128-file scan pays 128
+    tasks of fixed overhead to stat files the log already vouches for. Raising the
+    listing *threshold* instead would stat every file serially on the
+    driver — one request per file on an object store.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:
@@ -90,4 +103,8 @@ def get_spark(
         merged.update(conf)
     for k, v in merged.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if LISTING_PARALLELISM not in merged:
+        cores = spark.sparkContext.defaultParallelism
+        spark.conf.set(LISTING_PARALLELISM, str(2 * cores))
+    return spark
