@@ -9,8 +9,11 @@ chunk is one declarative plan and metrics come from the same pass.
 Job budget per epoch (what a 10^10-event deployment pays per micro-batch):
 
 - **MOR (the high-rate ingest mode): ONE Spark action.** scan → canonicalize
-  → LWW resolve → append the resolved generation. Everything else rides that
-  action as ``Observation``s: the quarantine count on the canonical rows and
+  → LWW resolve (combine-first ``max_by``: partial aggregation, then the
+  key exchange) → the write's bucket exchange → append the resolved
+  generation. Every epoch runs this same plan, whatever its input's
+  duplication or skew. Everything else rides that action as
+  ``Observation``s: the quarantine count on the canonical rows and
   the full per-bucket lineage (events applied / conflicts / watermark) as
   3 × n_buckets conditional aggregates on the resolved rows (plan-width
   bounded by ``OBS_LINEAGE_MAX_BUCKETS``; wider tables fall back to the
@@ -55,54 +58,20 @@ _QUARANTINE_DIR = "_quarantine"
 OBS_LINEAGE_MAX_BUCKETS = 64
 
 
-#: Fused one-exchange epochs pay the LWW reduce AFTER the shuffle, losing
-#: map-side combine. Measured crossover on the bench tail: at duplication
-#: ~12× (events per key) the combine-first two-exchange shape wins 1.2-1.4×
-#: at every parallelism level; at ~1× fused wins (half the shuffled bytes).
-#: The pipeline feeds back each epoch's measured duplication (it is in the
-#: lineage for free); below this threshold the next epoch runs fused.
-FUSE_DUP_MAX = 2.0
-
-#: The fused exchange partitions by conv_id, so one red-hot conversation
-#: serializes its whole bucket into one task. The per-bucket lineage gives
-#: the previous epoch's hottest-bucket share for free; at or above this
-#: share the epoch stays on the combine-first shape, whose first exchange
-#: spreads by (conv, turn) and whose write can additionally fan out
-#: (LakeTable.write_fanout).
-FUSE_SKEW_MAX = 0.25
-
-#: A single red-hot KEY (one (conv, turn) re-written over and over inside
-#: one epoch) is harmless to the COMBINE-FIRST shape: partial (map-side)
-#: aggregation hands the reducer at most one row per key per map task, and
-#: fold work is proportional to ROWS regardless of key concentration — so
-#: spreading the key further with the salted two-phase reduce only buys a
-#: second exchange (measured, bench.py --skew keyflood rows, like-for-like
-#: epochs: a 50%-one-key tail runs 2x FASTER than uniform unsalted — the
-#: reduce collapses half the batch map-side — and FORCING n_salts=8 on it
-#: costs 1.4-1.6x). The FUSED one-exchange shape is the opposite: it has no
-#: map-side combine, so a flooded key's whole share folds in ONE task.
-#: The previous epoch's lineage gives the hottest-key share for free
-#: (max(_cnt) / events); at or above this share the next epoch VETOES the
-#: fused shape. This is a sharper signal than FUSE_SKEW_MAX's bucket share
-#: (a bucket hot from many medium keys still spreads inside the fused
-#: task's fold; a flooded KEY cannot), and it covers the window where the
-#: flood is big enough to serialize a fused task but the bucket share
-#: stays under the skew gate. Salting itself (resolve_lww n_salts) remains
-#: the manual knob for deployments whose aggregation shape lacks combine.
-FUSE_FLOOD_MAX = 0.2
-
-
 def apply_events_batch(
     table: LakeTable,
     raw_events: DataFrame,
     app_id: str,
     epoch_id: int,
     n_salts: int | None = None,
-    dup_hint: float | None = None,
-    skew_hint: float | None = None,
-    flood_hint: float | None = None,
 ) -> dict[str, Any]:
     """Apply one raw event micro-batch to the table, exactly once.
+
+    The epoch plan is fixed: a combine-first ``max_by`` resolve (partial
+    aggregation map-side, so a flooded key reaches the reducer as at most
+    one row per map task), then the write's own bucket exchange.
+    ``n_salts`` switches the resolve to the salted two-phase reduce — the
+    manual skew knob (see ``resolve_lww``).
 
     Returns commit metrics. Per-bucket lineage (events applied, conflicts
     resolved = events beyond one per key, watermark position = max ts) is
@@ -120,42 +89,11 @@ def apply_events_batch(
         obs, F.sum(F.when(F.col("_valid"), 0).otherwise(1)).alias("n_quar")
     )
     valid = canon.filter(F.col("_valid")).drop("_valid")
+    resolved = resolve_lww(valid, n_salts=n_salts, with_count=True)
 
-    mor_fast = st.mode == "mor" and st.n_buckets <= OBS_LINEAGE_MAX_BUCKETS
-    # Fused one-exchange epoch (MOR, unsalted, low-duplication): pre-partition
-    # the reduce by conv_id into a width dividing n_buckets, so the SAME
-    # exchange serves the LWW aggregation AND routes every bucket wholly into
-    # one write task (murmur3 identity, lake/table.py _bucket_sql) — removes
-    # the second full-payload shuffle. The trade: the reduce happens after
-    # the exchange, so map-side combine is lost; on high-duplication tails
-    # the default combine-first shape shuffles ~dup× fewer rows and wins
-    # (see FUSE_DUP_MAX). Unknown duplication → combine-first.
-    # The env knob is consulted only when the fused shape is a candidate at
-    # all (MOR, unsalted): a COW/salted pipeline must not die on a knob that
-    # cannot apply to it, and a fleet with heterogeneous n_buckets can set
-    # the knob without aborting the tables it doesn't divide (those warn
-    # once and fall back to the heuristic).
-    fw_set, fw = (
-        _parse_fused_width_env(st.n_buckets) if mor_fast and not n_salts
-        else (False, None)
-    )
-    fuse = mor_fast and not n_salts and (
-        fw is not None if fw_set
-        else (
-            dup_hint is not None and dup_hint < FUSE_DUP_MAX
-            and (skew_hint is None or skew_hint < FUSE_SKEW_MAX)
-            and (flood_hint is None or flood_hint < FUSE_FLOOD_MAX)
-        )
-    )
-    pre_parts = (fw if fw_set else _fused_width(table.spark, st.n_buckets)) if fuse else None
-    resolved = resolve_lww(
-        valid, n_salts=n_salts, with_count=True, pre_partition=pre_parts
-    )
-
-    if mor_fast:
+    if st.mode == "mor" and st.n_buckets <= OBS_LINEAGE_MAX_BUCKETS:
         result = _apply_mor_one_action(
-            table, st, resolved, canon, obs, app_id, epoch_id,
-            aligned_parts=pre_parts,
+            table, st, resolved, canon, obs, app_id, epoch_id
         )
     else:
         result = _apply_two_action(
@@ -164,78 +102,6 @@ def apply_events_batch(
     if not result.get("skipped"):
         result["n_salts_used"] = int(n_salts or 0)
     return result
-
-
-def _parse_fused_width_env(n_buckets: int) -> tuple[bool, int | None]:
-    """Parse ``SPARK_GRAFT_FUSED_WIDTH`` ONCE, defensively (round-4 advice:
-    the knob used to be parsed at two sites, raised bare ValueError inside
-    the micro-batch on non-integers, and silently paid a double exchange on
-    widths that don't divide ``n_buckets``). Returns ``(set, width)``:
-    unset/blank → ``(False, None)`` (heuristic decides); ``0`` or negative →
-    ``(True, None)`` = fused shape disabled; a positive divisor of
-    ``n_buckets`` → ``(True, w)`` = fused shape forced at that width.
-
-    Invalid values (non-integer, or a width that doesn't divide this
-    table's ``n_buckets``) WARN once per process and fall back to the
-    heuristic — a tuning knob must never kill a running stream, and one
-    fleet-wide setting may legitimately not divide every table's bucket
-    count."""
-    import os
-    import warnings
-
-    raw = os.environ.get("SPARK_GRAFT_FUSED_WIDTH")
-    if raw is None or not raw.strip():
-        return False, None
-    try:
-        w = int(raw.strip())
-    except ValueError:
-        _warn_once(
-            warnings,
-            f"ignoring SPARK_GRAFT_FUSED_WIDTH={raw!r}: not an integer "
-            "(0 disables the fused epoch shape; a positive divisor of "
-            "n_buckets forces it) — falling back to the adaptive heuristic",
-        )
-        return False, None
-    if w <= 0:
-        return True, None
-    if n_buckets % w:
-        _warn_once(
-            warnings,
-            f"ignoring SPARK_GRAFT_FUSED_WIDTH={w} for this table: it does "
-            f"not divide n_buckets={n_buckets} (the fused epoch needs the "
-            "write width to divide the bucket count, murmur3 partition "
-            "identity) — falling back to the adaptive heuristic",
-        )
-        return False, None
-    return True, w
-
-
-_WARNED: set[str] = set()
-
-
-def _warn_once(warnings_mod, msg: str) -> None:
-    if msg not in _WARNED:
-        _WARNED.add(msg)
-        warnings_mod.warn(msg, stacklevel=3)
-
-
-def _fused_width(spark, n_buckets: int) -> int | None:
-    """Reduce/write width for the fused epoch: the largest divisor of
-    ``n_buckets`` within 2× the cluster's cores — a write task carries
-    ~35-40 ms of fixed overhead (measured, scripts/analyze_stages.py), so a
-    small deployment must not pay n_buckets tasks per micro-batch, while on
-    a real cluster (cores >> n_buckets) this returns n_buckets unchanged =
-    full per-bucket parallelism. None (fall back to the two-exchange shape)
-    when bucket count and core count are mutually prime enough that the
-    divisor would under-use the machine. (The SPARK_GRAFT_FUSED_WIDTH
-    override is handled by the caller via _parse_fused_width_env — this
-    function is pure heuristic.)"""
-    cores = spark.sparkContext.defaultParallelism
-    bound = max(1, 2 * cores)
-    if n_buckets <= bound:
-        return n_buckets
-    best = max((d for d in range(1, bound + 1) if n_buckets % d == 0), default=1)
-    return best if best >= min(cores, n_buckets) else None
 
 
 def _lineage_agg(n_buckets: int):
@@ -249,13 +115,11 @@ def _lineage_agg(n_buckets: int):
         parts.append(f"sum(CASE WHEN bucket = {b} THEN _cnt END) AS ea_{b}")
         parts.append(f"count(CASE WHEN bucket = {b} THEN 1 END) AS nk_{b}")
         parts.append(f"max(CASE WHEN bucket = {b} THEN ts END) AS wm_{b}")
-    # hottest single KEY's fold count — feeds the fused-shape flood veto
-    parts.append("max(_cnt) AS mc")
     return F.expr(f"struct({', '.join(parts)})").alias("lin")
 
 
 def _apply_mor_one_action(
-    table, st, resolved, canon, obs, app_id, epoch_id, aligned_parts=None
+    table, st, resolved, canon, obs, app_id, epoch_id
 ) -> dict[str, Any]:
     """MOR epoch in ONE Spark action (see module docstring): both
     Observations complete with the write; touched buckets come from the
@@ -291,9 +155,6 @@ def _apply_mor_one_action(
             "events_applied": n_events,
             "events_quarantined": n_quar,
             "max_bucket_share": share,
-            "max_key_flood": (
-                float(int(vals["mc"] or 0)) / n_events if n_events else 0.0
-            ),
         })
         return {
             "events_applied": n_events,
@@ -306,11 +167,10 @@ def _apply_mor_one_action(
         app_id=app_id,
         epoch_id=epoch_id,
         extra_metrics=pre_commit,
-        aligned_parts=aligned_parts,
     )
     if not result.get("skipped"):
         result.update(side)
-        result["plan_shape"] = "fused" if aligned_parts else "combine"
+        result["plan_shape"] = "combine"
     return result
 
 
@@ -328,12 +188,9 @@ def _apply_two_action(
                 F.sum("_cnt").alias("events_applied"),
                 (F.sum("_cnt") - F.count(F.lit(1))).alias("conflicts_resolved"),
                 F.max("ts").alias("watermark_pos"),
-                F.max("_cnt").alias("_max_cnt"),
             )
             .toPandas()
         )
-        max_cnt = int(per_bucket["_max_cnt"].max()) if len(per_bucket) else 0
-        per_bucket = per_bucket.drop(columns=["_max_cnt"])
         n_events = int(per_bucket["events_applied"].sum()) if len(per_bucket) else 0
         touched = [int(b) for b in per_bucket["bucket"]]
         n_quar = int((obs.get or {}).get("n_quar") or 0)
@@ -365,7 +222,6 @@ def _apply_two_action(
             "events_applied": n_events,
             "events_quarantined": n_quar,
             "max_bucket_share": share,
-            "max_key_flood": max_cnt / n_events if n_events else 0.0,
             "plan_shape": "two_action",
         })
         return result

@@ -42,15 +42,16 @@ def event_payload_cols(
 def resolve_lww(
     events: DataFrame,
     n_salts: int | None = None,
-    strategy: str = "max_by",
     key_cols: tuple[str, ...] = KEY_COLS,
     with_count: bool = False,
-    pre_partition: int | None = None,
 ) -> DataFrame:
     """Reduce an event batch to one winning event per ``(conv_id, turn_idx)``.
 
     Output columns: conv_id, turn_idx, op, <payload...>, ts, seq — where op/
-    payload/ts/seq come from the event with the greatest ``(ts, seq)`` stamp.
+    payload/ts/seq come from the event with the greatest ``(ts, seq)`` stamp,
+    picked by ``max_by(struct(event), struct(ts, seq))``. The struct
+    aggregation buffer plans as SortAggregate with a partial (map-side) step,
+    so shuffle volume is one row per key per map task.
 
     ``n_salts``: when set, a salted two-phase reduce — phase 1 groups by
     ``(key, pmod(xxhash64(seq), n_salts))`` so a hot key's events spread over
@@ -60,36 +61,12 @@ def resolve_lww(
     tasks too (e.g. a hot conv re-written millions of times in one epoch);
     benchmarked in bench.py, configurable per deployment.
 
-    ``strategy``: physical plan choice, semantics identical (bench.py measures
-    both):
-
-    - ``max_by`` — ``max_by(struct(event), struct(ts, seq))``. The struct
-      aggregation buffer forces SortAggregate (map-side sort + partial agg);
-      shuffle volume is still one row per key per map task.
-    - ``packed`` — the event is packed into ONE orderable string
-      ``hex(ts)||hex(seq)||json(payload)``, reduced with plain ``max()``
-      (primitive buffer → whole-stage-codegen HashAggregate, no sort anywhere),
-      then unpacked with ``from_json``. Trades sort for JSON encode/decode, all
-      JVM-side.
-
-    ``pre_partition``: hash-partition the events by ``key_cols[0]`` into this
-    many partitions BEFORE the reduce. HashPartitioning([conv_id]) satisfies
-    the groupBy's ClusteredDistribution([conv_id, turn_idx]) (subset rule),
-    so the aggregation runs on that single exchange — and because the lake's
-    bucket function is the same murmur3 hash, a width dividing n_buckets
-    leaves the output writable with NO second exchange (the fused ingest
-    path, see lake/table.py ``_bucket_expr``). The whole epoch becomes
-    scan → one exchange → [reduce + write].
+    ``with_count`` adds ``_cnt``, the number of events folded into each
+    winner (the per-bucket lineage derives from it).
     """
-    if pre_partition and not (n_salts and n_salts > 1):
-        events = events.repartition(pre_partition, F.col(key_cols[0]))
-    if strategy == "packed":
-        if with_count:
-            raise ValueError("with_count is not supported by the packed strategy")
-        return _resolve_packed(events, n_salts, key_cols)
     payload = event_payload_cols(events, key_cols)
     # The candidate row travels inside the aggregate as one struct; max_by keeps
-    # whole-stage codegen and partial aggregation (no window, no sort).
+    # partial aggregation (no window, no global sort).
     # Expressions are built as SQL strings (one parse each, ~3 py4j calls
     # total) — this runs once per micro-batch and Column-op construction was
     # a measurable slice of the per-epoch serial driver floor.
@@ -117,57 +94,4 @@ def resolve_lww(
         # events folded into this winner — per-bucket lineage derives from it
         # for free instead of a second full-batch aggregation.
         *(["_cnt"] if with_count else []),
-    )
-
-
-def _resolve_packed(
-    events: DataFrame, n_salts: int | None, key_cols: tuple[str, ...] = KEY_COLS
-) -> DataFrame:
-    """Hash-aggregate LWW: pack (ts, seq, event) into one max()-able string.
-
-    Big-endian fixed-width hex of non-negative ints sorts lexicographically in
-    numeric order, so ``max(packed)`` picks the greatest (ts, seq). ts is
-    offset by 2^62 so pre-1970 timestamps stay non-negative.
-    """
-    from pyspark.sql import types as T
-
-    payload = event_payload_cols(events, key_cols)
-    ts_type = events.schema["ts"].dataType
-    body = F.to_json(F.struct(F.col("op"), *[F.col(c) for c in payload]))
-    packed = F.concat(
-        # cast("timestamp"): unix_micros rejects TIMESTAMP_NTZ; under the
-        # engine's pinned UTC session tz the cast is wall-clock-preserving.
-        F.lpad(
-            F.hex(F.unix_micros(F.col("ts").cast("timestamp")) + F.lit(1 << 62)),
-            16,
-            "0",
-        ),
-        F.lpad(F.hex(F.col("seq")), 16, "0"),
-        body,
-    ).alias("p")
-
-    src = events.select(*key_cols, packed, F.col("seq"))
-    if n_salts and n_salts > 1:
-        salt = F.pmod(F.xxhash64(F.col("seq")), F.lit(n_salts)).alias("_salt")
-        local = src.groupBy(*key_cols, salt).agg(F.max("p").alias("p"))
-        resolved = local.groupBy(*key_cols).agg(F.max("p").alias("p"))
-    else:
-        resolved = src.groupBy(*key_cols).agg(F.max("p").alias("p"))
-
-    body_schema = T.StructType(
-        [T.StructField("op", T.StringType())]
-        + [T.StructField(c, events.schema[c].dataType) for c in payload]
-    )
-    w = F.from_json(F.substring(F.col("p"), 33, 2_000_000_000), body_schema).alias("w")
-    return resolved.select(
-        *key_cols,
-        w,
-        (F.conv(F.substring(F.col("p"), 1, 16), 16, 10).cast("long") - F.lit(1 << 62)).alias("_ts_us"),
-        F.conv(F.substring(F.col("p"), 17, 16), 16, 10).cast("long").alias("seq"),
-    ).select(
-        *key_cols,
-        F.col("w.op").alias("op"),
-        *[F.col(f"w.{c}").alias(c) for c in payload],
-        F.timestamp_micros(F.col("_ts_us")).cast(ts_type).alias("ts"),
-        F.col("seq"),
     )

@@ -7,12 +7,11 @@ Physical layout::
 
 Key design decisions, each driven by 100 TB scale:
 
-- **Hash-bucketed by conv_id** (``pmod(murmur3(conv_id), n_buckets)`` —
-  Spark's shuffle hash, see ``_bucket_sql`` for why): a
-  MERGE reads and rewrites ONLY the buckets its batch touches — file-level
-  partition pruning without a metastore. A micro-batch touching 1% of
-  conversations rewrites ~1% of the table, not all of it. turn_idx stays
-  inside the bucket so a whole conversation is co-located.
+- **Hash-bucketed by conv_id** (``pmod(murmur3(conv_id), n_buckets)``, see
+  ``_bucket_sql``): a MERGE reads and rewrites ONLY the buckets its batch
+  touches — file-level partition pruning without a metastore. A micro-batch
+  touching 1% of conversations rewrites ~1% of the table, not all of it.
+  turn_idx stays inside the bucket so a whole conversation is co-located.
 - **Bucket pruning**: every generation of a key sits in the key's bucket, so
   ``read(where=[("conv_id", "=", k)])`` keeps only the files of bucket
   ``pmod(murmur3(k), n_buckets)`` (the ``n_buckets`` of the version read) —
@@ -98,15 +97,7 @@ def _bucket_sql(n_buckets: int, key: str = "conv_id") -> str:
     read pruning all go through it (``_bucket_expr`` is its Column face).
     ``key`` must carry the table's PHYSICAL conv_id type
     (``_physical_key``): murmur3 hashes the value's binary form, so an int
-    5 and the string ``'5'`` land in different buckets.
-
-    Murmur3 (``hash``) deliberately matches Spark's own HashPartitioning
-    hash: ``repartition(P, "conv_id")`` routes a row to partition
-    ``pmod(murmur3(conv_id), P)``, so whenever ``P`` divides ``n_buckets``
-    every bucket lands wholly inside one task (``H mod n ≡ b ⇒ H mod P =
-    b mod P``). That identity is what lets the ingest hot path resolve and
-    write in ONE exchange (see ``apply_events_batch``) while still emitting
-    exactly one file per touched bucket."""
+    5 and the string ``'5'`` land in different buckets."""
     return f"cast(pmod(hash({key}), {int(n_buckets)}) as int)"
 
 
@@ -734,11 +725,6 @@ class LakeTable:
     #: new file past this many rows. None = one file per bucket per commit.
     max_records_per_file: int | None = None
 
-    #: Write fan-out: >1 splits each bucket's write across this many tasks
-    #: (sub-bucket key = pmod(_seq)), for commits where a single bucket's
-    #: batch share is too large for one task's ~128 MB file budget.
-    write_fanout: int = 1
-
     def _write_data(
         self,
         df: DataFrame,
@@ -746,7 +732,6 @@ class LakeTable:
         n_touched: int | None = None,
         cluster_by: list[str] | None = None,
         bloom_keyset: dict | None = None,
-        aligned: bool = False,
     ) -> list[str]:
         """Write df (must contain the bucket col) into data/, return new rel paths.
 
@@ -759,16 +744,16 @@ class LakeTable:
         token directory that ``vacuum`` reclaims.
 
         The frame is hash-repartitioned on the bucket column so each bucket
-        lands in ~one task (×``write_fanout`` sub-splits when configured) →
-        O(touched buckets) files per commit; ``max_records_per_file`` rolls
-        oversized task outputs into multiple ~target-size files.
+        lands in one task → O(touched buckets) files per commit;
+        ``max_records_per_file`` rolls oversized task outputs into multiple
+        ~target-size files.
         """
         token = uuid.uuid4().hex[:12]
         dest = join(self.data_dir, f"{_COMMIT_COL}={token}")
         # Write-stage width: one task per touched bucket, CLAMPED to 2× the
         # cluster's core count. A write task carries ~35-40 ms of fixed
         # overhead beyond its executorRunTime (measured,
-        # scripts/analyze_stages.py): with 32 touched buckets on 1-4 local
+        # BENCH.md round 4): with 32 touched buckets on 1-4 local
         # cores the pinned 32-task stage was >50% overhead and capped 1→4
         # scaling at ~0.46. Under the clamp a task holds several whole
         # buckets (hash on the bucket col) and partitionBy still emits
@@ -778,22 +763,7 @@ class LakeTable:
         parts = max(1, n_touched if n_touched is not None else n_buckets)
         cores = df.sparkSession.sparkContext.defaultParallelism
         parts = min(parts, max(1, 2 * cores))
-        if aligned and not (self.write_fanout > 1 and "_seq" in df.columns):
-            # The caller already partitioned df by conv_id into a width that
-            # divides n_buckets (apply_events_batch's fused ingest path), so
-            # every bucket sits wholly inside one task — write as-is, zero
-            # extra exchange; partitionBy below still emits per-bucket files.
-            # An explicit write_fanout is an operator's skew decision and
-            # takes precedence (the extra exchange is the point of fan-out).
-            out = df
-        elif self.write_fanout > 1 and "_seq" in df.columns:
-            out = df.repartition(
-                parts * self.write_fanout,
-                F.col(_BUCKET_COL),
-                F.pmod(F.col("_seq"), F.lit(self.write_fanout)),
-            )
-        else:
-            out = df.repartition(parts, F.col(_BUCKET_COL))
+        out = df.repartition(parts, F.col(_BUCKET_COL))
         if cluster_by:
             # Per-task sort before write (no exchange): rows land key-ordered
             # inside each file, so parquet row-group stats become tight,
@@ -872,7 +842,6 @@ class LakeTable:
         epoch_id: int | None = None,
         extra_metrics: Any = None,
         touched: list[int] | None = None,
-        aligned_parts: int | None = None,
     ) -> dict[str, Any]:
         """MERGE one LWW-resolved batch (one row per key, cols: key, op,
         payload..., ts, seq) into the table. Returns commit metrics.
@@ -890,13 +859,6 @@ class LakeTable:
         apply_events_batch ride its lineage on an Observation of the write
         job instead of a separate aggregation action.
 
-        ``aligned_parts``: the batch is ALREADY hash-partitioned by conv_id
-        into this many partitions (a divisor of n_buckets), so the MOR write
-        can skip its own repartition — the fused one-exchange ingest path
-        (see ``_bucket_sql``). Ignored (safe fallback to the normal write
-        shuffle) when the divisibility no longer holds, e.g. after a raced
-        rebucket.
-
         Concurrent writers are safe (optimistic concurrency, see
         :meth:`_publish`): a MOR merge is a pure append, so losing the race
         just republishes the same files at the next version (LWW stamps make
@@ -909,7 +871,7 @@ class LakeTable:
         extra = extra_metrics
         for _ in range(MAX_COMMIT_ATTEMPTS):
             status, payload = self._merge_once(
-                resolved, app_id, epoch_id, extra, touched, aligned_parts
+                resolved, app_id, epoch_id, extra, touched
             )
             if status == "done":
                 return payload
@@ -931,7 +893,6 @@ class LakeTable:
         epoch_id: int | None,
         extra_metrics: Any,
         touched: list[int] | None,
-        aligned_parts: int | None = None,
     ) -> tuple[str, Any]:
         with phase("state"):
             st = self._state()
@@ -985,7 +946,6 @@ class LakeTable:
                 st.n_buckets,
                 n_touched=len(touched) if touched is not None else None,
                 bloom_keyset=st.keyset,
-                aligned=bool(aligned_parts) and st.n_buckets % aligned_parts == 0,
             )
             if touched is None:  # free: the written paths name the buckets
                 touched = sorted({_bucket_of(f) for f in added})

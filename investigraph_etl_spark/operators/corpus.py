@@ -12,7 +12,7 @@ These are the steps between "deduped documents" and "training batches":
   ``df.sample`` whose output depends on partition layout.
 - :func:`pack_sequences` — greedy contiguous packing of documents into
   token-budget bins (sequence packing for pretraining batches). Documents are
-  salted into ``n_groups`` independent streams and packed by a running token
+  salted into ``n_groups`` independent streams and binned by a running token
   sum WITHIN each group — the window is per-group, so the shuffle is an
   even ``n_groups``-way exchange and no single partition ever sees the whole
   corpus (a global ORDER BY would serialize at 100 TB). Each closed bin's

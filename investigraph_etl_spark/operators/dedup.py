@@ -585,6 +585,11 @@ def connected_components(
     + a min aggregation + one bounded convergence count; label frames are
     ``localCheckpoint``'d so plan lineage stays flat across rounds (the
     iterative-loop lesson from IVF's ``train_centroids``).
+
+    Raises ``RuntimeError`` when labels still change in round ``max_iter``:
+    some node sits more than ``max_iter - 1`` hops from its component's
+    smallest id, and its label would be a non-minimal id that splits the
+    component.
     """
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     edges = e.unionByName(
@@ -595,6 +600,7 @@ def connected_components(
         .withColumn("label", F.col("id"))
         .localCheckpoint()
     )
+    changed = 0
     for _ in range(max_iter):
         nbr_min = (
             edges.join(labels.withColumnRenamed("id", "a"), "a")
@@ -611,6 +617,11 @@ def connected_components(
         labels = new_labels.drop("_chg")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} "
+            f"rounds: {changed} labels changed in the last round"
+        )
     return labels.select(
         F.col("id").cast("long").alias("doc_id"),
         F.col("label").cast("long").alias("cluster_id"),

@@ -6,8 +6,7 @@ Two physical strategies for top-k cosine neighbors:
   the corpus — a broadcast nested-loop join, no shuffle of the corpus at all;
   per-query top-k via a ranking window partitioned by query id. At 100 TB the
   corpus side stays partition-parallel; only k rows per query per partition
-  survive to the final shuffle when AQE applies partial top-k (the window is
-  preceded by a per-partition limit in the packed variant below).
+  survive to the final shuffle when AQE applies partial top-k.
 - **Sign-LSH** (scale path): T independent tables of P deterministic
   hyperplanes each (portable pseudo-random from md5 — identical in the DuckDB
   oracle) hash each vector to a P-bit bucket per table; candidates = same-

@@ -103,12 +103,6 @@ def q_cdc_lww_salted(spark, sf_dir):
     return resolve_lww(ev, n_salts=8)
 
 
-def q_cdc_lww_packed(spark, sf_dir):
-    """Packed-string LWW (pure HashAggregate physical alternative)."""
-    ev = _as_changes(_t(spark, sf_dir, "events"))
-    return resolve_lww(ev, strategy="packed")
-
-
 _CDC_LWW_ORACLE = (
     _LWW_SQL + "SELECT conv_id, turn_idx, op, value, props, ts, seq FROM w"
 )
@@ -1064,7 +1058,6 @@ QUERIES = {
     "cdc_apply_epochs": q_cdc_apply_epochs,
     "cdc_lww_resolve": q_cdc_lww_resolve,
     "cdc_lww_salted": q_cdc_lww_salted,
-    "cdc_lww_packed": q_cdc_lww_packed,
     "cdc_dedup_commitlog": q_cdc_dedup_commitlog,
     "agg_pricing_summary": q_agg_pricing_summary,
     "join_revenue_by_segment": q_join_revenue_by_segment,
@@ -1117,7 +1110,6 @@ ORACLES = {
     "cdc_apply_epochs": _CDC_APPLY_ORACLE,
     "cdc_lww_resolve": _CDC_LWW_ORACLE,
     "cdc_lww_salted": _CDC_LWW_ORACLE,
-    "cdc_lww_packed": _CDC_LWW_ORACLE,
     "cdc_dedup_commitlog": _CDC_DEDUP_ORACLE,
     "agg_pricing_summary": _AGG_PRICING_ORACLE,
     "join_revenue_by_segment": _JOIN_REVENUE_ORACLE,

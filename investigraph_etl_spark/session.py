@@ -39,14 +39,14 @@ ENGINE_CONF: dict[str, str] = {
     # Don't let tiny test tables produce 200 empty shuffle partitions.
     "spark.sql.shuffle.partitions": "32",
     # In-memory-friendly partition sizing for the local harness; on a real
-    # cluster this is set per-deployment (see bench.py for the scaling run).
+    # cluster this is set per-deployment (see BENCH.md, round 4).
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 
 
-#: Benchmark preset (bench.py, scripts/profile_ingest.py, scaling children):
+#: Benchmark preset (bench.py; its round-4 profiling is in BENCH.md):
 #: production compression split, fine-grained shuffle partitions for AQE to
 #: coalesce, tmpfs spill. ONE definition — round-4 advice was to stop each
 #: bench script re-declaring overlapping conf.

@@ -59,10 +59,6 @@ class IngestPipeline:
     #: still APPLIED (only duplicate seqs are dropped) — LWW is
     #: order-insensitive, so correctness never depends on the watermark.
     dedup_within_watermark: str | None = None
-    #: >1 splits each bucket's write across this many tasks (sub-bucket key
-    #: pmod(_seq)) — the hot-bucket mitigation when one conversation owns a
-    #: large share of the tail (see bench.py run_skew for the measurement).
-    write_fanout: int = 1
     results: list[dict[str, Any]] = field(default_factory=list)
 
     def _reader(self):
@@ -97,35 +93,13 @@ class IngestPipeline:
         h = hashlib.sha1(os.path.abspath(self.checkpoint_dir).encode()).hexdigest()[:8]
         return f"{self.app_id}@{h}"
 
-    def _shape_hints(self) -> tuple[float | None, float | None, float | None]:
-        """Measured (duplication, hottest-bucket share, hottest-key share)
-        of the last applied epoch — free from its lineage. apply_events_batch
-        uses them to pick the epoch plan shape: combine-first vs fused
-        one-exchange (FUSE_DUP_MAX / FUSE_SKEW_MAX), with single-key floods
-        vetoing the fused shape (FUSE_FLOOD_MAX — map-side combine, which
-        only the combine-first shape has, is the measured flood
-        mitigation)."""
-        for res in reversed(self.results):
-            ea = res.get("events_applied")
-            cr = res.get("conflicts_resolved")
-            if ea and cr is not None and ea > cr:
-                return (
-                    ea / (ea - cr),
-                    res.get("max_bucket_share"),
-                    res.get("max_key_flood"),
-                )
-        return None, None, None
-
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         with phase("epoch"):
             with phase("table_load"):
                 table = LakeTable.load(self.spark, self.table_root)
-                table.write_fanout = self.write_fanout
-            dup_hint, skew_hint, flood_hint = self._shape_hints()
             res = apply_events_batch(
                 table, batch_df, app_id=self.commit_token, epoch_id=batch_id,
-                n_salts=self.n_salts, dup_hint=dup_hint, skew_hint=skew_hint,
-                flood_hint=flood_hint,
+                n_salts=self.n_salts,
             )
         self.results.append(res)
 

@@ -28,11 +28,6 @@ AUDITED: dict[str, str] = {
         "modes) so shuffle volume is one row per key per map task; filter on "
         "validity stays in the scan stage."
     ),
-    "cdc_lww_packed": (
-        "Same shape but a primitive `max(string)` buffer → whole-stage-codegen "
-        "`HashAggregate`; the JSON pack/unpack is JVM-side expression work, "
-        "no Python."
-    ),
     "agg_pricing_summary": (
         "`PushedFilters` on l_shipdate reaches the parquet scan; `ReadSchema` "
         "prunes to the 7 referenced columns; partial hash agg before the "
@@ -135,10 +130,9 @@ AUDITED: dict[str, str] = {
 }
 
 
-#: epoch shape → (resolve kwargs, the audit assertion). These are the three
-#: physical shapes apply_events_batch can run an ingest epoch in; the
-#: adaptive choice (cdc/apply.py FUSE_DUP_MAX / FUSE_SKEW_MAX /
-#: FUSE_FLOOD_MAX) is driven by the previous epoch's lineage.
+#: epoch shape → (resolve kwargs, the audit assertion). These are the two
+#: physical shapes apply_events_batch can run an ingest epoch's resolve in:
+#: combine-first always, salted only when the caller sets n_salts.
 EPOCH_SHAPES: dict[str, tuple[dict, str]] = {
     "combine-first (default)": (
         dict(with_count=True),
@@ -149,16 +143,6 @@ EPOCH_SHAPES: dict[str, tuple[dict, str]] = {
         "flood table). The write adds its own clustering exchange: two "
         "exchanges per epoch total.",
     ),
-    "fused one-exchange (pre_partition=8, dividing n_buckets=32)": (
-        dict(with_count=True, pre_partition=8),
-        "ONE `REPARTITION_BY_NUM` hash exchange on conv_id serves BOTH the "
-        "LWW aggregation (HashPartitioning subset rule) AND per-bucket file "
-        "routing (murmur3 identity with the lake's bucket function) — no "
-        "second full-payload shuffle. The trade: the aggregation runs with "
-        "NO partial (map-side) step, so the lineage gates this shape off at "
-        "dup ≥ 2, hottest-bucket share ≥ 0.25, or hottest-KEY share ≥ 0.2 "
-        "(a flooded key would fold inside one task here).",
-    ),
     "salted two-phase (manual n_salts=8)": (
         dict(with_count=True, n_salts=8),
         "Phase 1 groups by (key, pmod(xxhash64(seq), 8)) so one key's rows "
@@ -166,7 +150,7 @@ EPOCH_SHAPES: dict[str, tuple[dict, str]] = {
         "key. TWO aggregation exchanges — measured 1.4-1.6x SLOWER than "
         "combine-first on flood tails (map-side combine already bounds "
         "them), so this stays a manual knob for aggregation shapes without "
-        "combine, never an adaptive default.",
+        "combine, never the default.",
     ),
 }
 
@@ -180,11 +164,10 @@ def epoch_shapes_section(spark) -> str:
     )
     out = io.StringIO()
     out.write(
-        "\n## ingest epoch shapes (cdc/apply.py adaptive plan)\n\n"
-        "The LWW resolve of one micro-batch, in each of the three physical "
-        "shapes the epoch can run in. Shape selection is per-epoch, from the "
-        "PREVIOUS epoch's lineage (duplication, hottest-bucket share, "
-        "hottest-key share — all free from the write job's Observation).\n"
+        "\n## ingest epoch shapes (cdc/apply.py)\n\n"
+        "The LWW resolve of one micro-batch, in each of the two physical "
+        "shapes the epoch can run in: combine-first on every epoch, salted "
+        "only when the pipeline sets `n_salts`.\n"
     )
     for label, (kw, claim) in EPOCH_SHAPES.items():
         df = resolve_lww(ev, **kw)

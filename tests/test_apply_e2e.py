@@ -179,101 +179,50 @@ def test_lineage_parity_across_apply_paths(spark, tmp_path):
     assert (mor["events_applied"] > 0).any()
 
 
-def test_fused_epoch_shape_unique_keys(spark, tmp_path):
-    """The adaptive epoch shape: a dup≈1 tail flips epochs ≥2 to the fused
-    one-exchange plan (previous epoch's lineage is the hint). End-to-end
-    result must match the replay oracle, and every MOR commit must still add
-    at most one file per bucket (the murmur3/partition-id alignment)."""
-    import pandas as pd
-
-    from investigraph_etl_spark.cdc.generator import write_epoch_files
-    from investigraph_etl_spark.cdc.oracle import replay_oracle
-    from investigraph_etl_spark.streaming.ingest import IngestPipeline
-
-    n_buckets = 8
-    rows = []
-    t0 = pd.Timestamp("2025-05-01")
-    for epoch in range(3):
-        for i in range(400):  # unique keys per epoch AND across epochs
-            rows.append({
-                "op": "insert", "conv_id": f"c{epoch}-{i}", "turn_idx": 0,
-                "role": "user", "text": f"t{epoch}.{i}", "tool": None,
-                "ts": t0 + pd.Timedelta(seconds=epoch * 1000 + i),
-                "seq": epoch * 1000 + i, "epoch": epoch,
-            })
+def _tail_frame(rows):
     ev = pd.DataFrame(rows)
     ev["turn_idx"] = ev["turn_idx"].astype("int32")
     ev["ts"] = ev["ts"].astype("datetime64[us]")
     ev["tool"] = ev["tool"].astype("string")  # all-null object → parquet INT32
-    landing = str(tmp_path / "landing")
-    write_epoch_files(ev, landing, files_per_epoch=4)
-    table = LakeTable.create(
-        spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, n_buckets=n_buckets, mode="mor"
-    )
-    table.compact_threshold = 10**9
-    pipe = IngestPipeline(
-        spark, events_dir=landing, table_root=table.root,
-        checkpoint_dir=str(tmp_path / "ckpt"), max_files_per_trigger=4,
-    )
-    results = pipe.run_available_now()
-    assert len(results) == 3
-    # epoch 1 has no hint (combine-first); epochs 2-3 see dup==1.0 → fused
-    assert pipe._shape_hints() == (
-        1.0,
-        pytest.approx(results[-1]["max_bucket_share"]),
-        pytest.approx(results[-1]["max_key_flood"]),
-    )
-    assert [r["plan_shape"] for r in results] == ["combine", "fused", "fused"]
-    # every merge commit added at most one file per bucket
-    for c in table.history():
-        if c.get("epoch_id") is not None and c.get("added"):
-            per_bucket: dict = {}
-            for f in c["added"]:
-                b = [p for p in f.split("/") if p.startswith("bucket=")][0]
-                per_bucket[b] = per_bucket.get(b, 0) + 1
-            assert max(per_bucket.values()) == 1
-    got = (
-        table.read().orderBy("conv_id", "turn_idx")
-        .toPandas()[["conv_id", "turn_idx", "text"]]
-    )
-    want = (
-        replay_oracle(ev.drop(columns=["epoch"]))
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)[["conv_id", "turn_idx", "text"]]
-    )
-    pd.testing.assert_frame_equal(got.reset_index(drop=True), want,
-                                  check_dtype=False)
+    return ev
 
 
-def test_fused_width_divisor_rules(spark):
-    from investigraph_etl_spark.cdc.apply import _fused_width
-
-    cores = spark.sparkContext.defaultParallelism
-    assert _fused_width(spark, 1) == 1
-    w = _fused_width(spark, 32)
-    if 32 <= 2 * cores:
-        assert w == 32
-    else:
-        assert w is not None and 32 % w == 0 and w <= 2 * cores
-    # prime bucket counts that cannot divide near the core count fall back
-    assert _fused_width(spark, 997) is None
+def _unique_tail(n_epochs: int = 3, per_epoch: int = 400):
+    """Every (conv, turn) inserted once, within and across epochs."""
+    t0 = pd.Timestamp("2025-05-01")
+    return _tail_frame([
+        {"op": "insert", "conv_id": f"c{epoch}-{i}", "turn_idx": 0,
+         "role": "user", "text": f"t{epoch}.{i}", "tool": None,
+         "ts": t0 + pd.Timedelta(seconds=epoch * 1000 + i),
+         "seq": epoch * 1000 + i, "epoch": epoch}
+        for epoch in range(n_epochs) for i in range(per_epoch)
+    ])
 
 
-def test_hot_bucket_tail_stays_on_combine_shape(spark, tmp_path):
-    """A dup≈1 tail would normally fuse — but when one conversation owns
-    ~50% of the previous epoch (hottest-bucket share ≥ FUSE_SKEW_MAX, free
-    from lineage), the fused conv_id exchange would serialize that bucket
-    into one task, so the epoch must stay combine-first."""
-    import pandas as pd
+def _duplicated_tail(n_epochs: int = 3, n_keys: int = 100, writes: int = 4):
+    """The same ``n_keys`` keys re-written ``writes`` times in every epoch."""
+    t0 = pd.Timestamp("2025-05-01")
+    rows, seq = [], 0
+    for epoch in range(n_epochs):
+        for _ in range(writes):
+            for i in range(n_keys):
+                rows.append({
+                    "op": "upsert", "conv_id": f"c{i}", "turn_idx": 0,
+                    "role": "user", "text": f"t{seq}", "tool": None,
+                    "ts": t0 + pd.Timedelta(seconds=seq), "seq": seq,
+                    "epoch": epoch,
+                })
+                seq += 1
+    return _tail_frame(rows)
 
-    from investigraph_etl_spark.cdc.generator import write_epoch_files
-    from investigraph_etl_spark.streaming.ingest import IngestPipeline
 
-    rows = []
+def _hot_bucket_tail(n_epochs: int = 2, per_epoch: int = 400):
+    """Half of every epoch in ONE conversation (distinct turns), the other
+    half on unique keys."""
     t0 = pd.Timestamp("2025-06-01")
-    seq = 0
-    for epoch in range(2):
-        for i in range(400):
+    rows, seq = [], 0
+    for epoch in range(n_epochs):
+        for i in range(per_epoch):
             hot = i % 2 == 0
             rows.append({
                 "op": "insert",
@@ -283,72 +232,14 @@ def test_hot_bucket_tail_stays_on_combine_shape(spark, tmp_path):
                 "ts": t0 + pd.Timedelta(seconds=seq), "seq": seq, "epoch": epoch,
             })
             seq += 1
-    ev = pd.DataFrame(rows)
-    ev["turn_idx"] = ev["turn_idx"].astype("int32")
-    ev["ts"] = ev["ts"].astype("datetime64[us]")
-    ev["tool"] = ev["tool"].astype("string")
-    landing = str(tmp_path / "landing")
-    write_epoch_files(ev, landing, files_per_epoch=4)
-    LakeTable.create(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
-                     n_buckets=8, mode="mor")
-    pipe = IngestPipeline(
-        spark, events_dir=landing, table_root=str(tmp_path / "t"),
-        checkpoint_dir=str(tmp_path / "ckpt"), max_files_per_trigger=4,
-    )
-    results = pipe.run_available_now()
-    assert len(results) == 2
-    assert all(r["max_bucket_share"] >= 0.5 for r in results)
-    dup, skew, flood = pipe._shape_hints()
-    assert dup == 1.0 and skew >= 0.5
-    assert flood is not None and flood < 0.2  # unique keys: no single-key flood
-    # dup says fuse; the skew gate must override
-    assert [r["plan_shape"] for r in results] == ["combine", "combine"]
-
-
-def test_fused_width_env_parsed_defensively(monkeypatch):
-    """ADVICE r4 (+ round-5 review): SPARK_GRAFT_FUSED_WIDTH is parsed at
-    ONE site; junk values and non-divisor widths WARN once and fall back to
-    the adaptive heuristic — a tuning knob must never kill a running
-    stream, and a fleet-wide setting may not divide every table's bucket
-    count."""
-    import warnings as _warnings
-
-    from investigraph_etl_spark.cdc import apply as apply_mod
-    from investigraph_etl_spark.cdc.apply import _parse_fused_width_env
-
-    monkeypatch.delenv("SPARK_GRAFT_FUSED_WIDTH", raising=False)
-    assert _parse_fused_width_env(32) == (False, None)
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_WIDTH", "  ")
-    assert _parse_fused_width_env(32) == (False, None)
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_WIDTH", "0")
-    assert _parse_fused_width_env(32) == (True, None)   # explicit disable
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_WIDTH", "8")
-    assert _parse_fused_width_env(32) == (True, 8)
-
-    monkeypatch.setattr(apply_mod, "_WARNED", set())
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_WIDTH", "4x")
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        assert _parse_fused_width_env(32) == (False, None)
-        assert _parse_fused_width_env(32) == (False, None)  # warned once
-    assert len(w) == 1 and "not an integer" in str(w[0].message)
-
-    monkeypatch.setattr(apply_mod, "_WARNED", set())
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_WIDTH", "5")
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        assert _parse_fused_width_env(32) == (False, None)
-    assert len(w) == 1 and "does not divide" in str(w[0].message)
+    return _tail_frame(rows)
 
 
 def _epoch_tail(flood_rows: int, uniq_rows: int, n_epochs: int):
     """Synthetic tail: per epoch, `flood_rows` upserts re-write ONE
     (conv, turn) key and `uniq_rows` inserts hit unique keys."""
-    import pandas as pd
-
-    rows = []
     t0 = pd.Timestamp("2025-06-01")
-    seq = 0
+    rows, seq = [], 0
     for epoch in range(n_epochs):
         for i in range(flood_rows + uniq_rows):
             hot = i < flood_rows
@@ -361,61 +252,119 @@ def _epoch_tail(flood_rows: int, uniq_rows: int, n_epochs: int):
                 "epoch": epoch,
             })
             seq += 1
-    ev = pd.DataFrame(rows)
-    ev["turn_idx"] = ev["turn_idx"].astype("int32")
-    ev["ts"] = ev["ts"].astype("datetime64[us]")
-    ev["tool"] = ev["tool"].astype("string")
-    return ev
+    return _tail_frame(rows)
 
 
-def _run_tail(spark, tmp_path, ev, tag):
+def _run_tail(spark, tmp_path, ev, tag, n_buckets):
+    """Land ``ev`` as 4 files per epoch and drain it through IngestPipeline
+    into a fresh MOR table; returns (table, per-epoch results)."""
     from investigraph_etl_spark.cdc.generator import write_epoch_files
     from investigraph_etl_spark.streaming.ingest import IngestPipeline
 
     landing = str(tmp_path / f"landing-{tag}")
     write_epoch_files(ev, landing, files_per_epoch=4)
-    LakeTable.create(spark, str(tmp_path / f"t-{tag}"), TRANSCRIPT_SCHEMA,
-                     n_buckets=32, mode="mor")
+    table = LakeTable.create(spark, str(tmp_path / f"t-{tag}"), TRANSCRIPT_SCHEMA,
+                             n_buckets=n_buckets, mode="mor")
     pipe = IngestPipeline(
-        spark, events_dir=landing, table_root=str(tmp_path / f"t-{tag}"),
+        spark, events_dir=landing, table_root=table.root,
         checkpoint_dir=str(tmp_path / f"ckpt-{tag}"), max_files_per_trigger=4,
     )
-    return pipe.run_available_now()
+    return table, pipe.run_available_now()
 
 
-def test_single_key_flood_vetoes_fused_shape(spark, tmp_path):
-    """VERDICT r4 #4, resolved by measurement (bench.py --skew keyflood
-    rows): map-side combine absorbs single-key floods in the COMBINE-FIRST
-    shape (forcing the salted reduce on a 50%-one-key tail COSTS ~1.4x), so
-    the lineage's hottest-key share must instead VETO the FUSED shape — the
-    one shape with no combine, where the flood's whole share folds in one
-    task. This tail is crafted so dup < FUSE_DUP_MAX and hottest-bucket
-    share < FUSE_SKEW_MAX (the old gates would fuse); only the key-flood
-    signal catches it."""
-    from investigraph_etl_spark.cdc.apply import (
-        FUSE_DUP_MAX,
-        FUSE_FLOOD_MAX,
-        FUSE_SKEW_MAX,
+def _assert_one_file_per_bucket(table):
+    """Every merge commit added at most one file per bucket."""
+    for c in table.history():
+        if c.get("epoch_id") is not None and c.get("added"):
+            buckets = [
+                [p for p in f.split("/") if p.startswith("bucket=")][0]
+                for f in c["added"]
+            ]
+            assert len(buckets) == len(set(buckets))
+
+
+def _assert_matches_oracle(table, ev):
+    cols = ["conv_id", "turn_idx", "text"]
+    got = table.read().orderBy("conv_id", "turn_idx").toPandas()[cols]
+    want = (
+        replay_oracle(ev.drop(columns=["epoch"]))
+        .sort_values(["conv_id", "turn_idx"])
+        .reset_index(drop=True)[cols]
     )
+    pd.testing.assert_frame_equal(got.reset_index(drop=True), want,
+                                  check_dtype=False)
 
-    # ~20.5% of each epoch on one key, 32 buckets → bucket share ≈ 0.23
-    results = _run_tail(spark, tmp_path,
-                        _epoch_tail(flood_rows=205, uniq_rows=795, n_epochs=3),
-                        "flood")
+
+def test_unique_key_tail_matches_oracle(spark, tmp_path):
+    """A duplication-1 tail (every key inserted once) through the streaming
+    pipeline: the table equals the replay oracle and every MOR commit adds
+    at most one file per bucket."""
+    ev = _unique_tail()
+    table, results = _run_tail(spark, tmp_path, ev, "uniq", n_buckets=8)
+    assert len(results) == 3
+    assert all(r["conflicts_resolved"] == 0 for r in results)
+    _assert_one_file_per_bucket(table)
+    _assert_matches_oracle(table, ev)
+
+
+def test_hot_bucket_tail_stays_on_combine_shape(spark, tmp_path):
+    """One conversation owns ~50% of every epoch: the hot epochs run the
+    same combine-first plan as any other (the resolve spreads by
+    (conv, turn)), the lineage reports the hot bucket's share, each commit
+    still adds at most one file per bucket, and the table equals the
+    replay oracle."""
+    ev = _hot_bucket_tail()
+    table, results = _run_tail(spark, tmp_path, ev, "hot", n_buckets=8)
+    assert len(results) == 2
+    assert all(r["max_bucket_share"] >= 0.5 for r in results)
+    _assert_one_file_per_bucket(table)
+    _assert_matches_oracle(table, ev)
+
+
+def test_single_key_flood_tail_matches_oracle(spark, tmp_path):
+    """~20% of each epoch re-writes ONE (conv, turn) key. Map-side combine
+    in the combine-first resolve absorbs the flood (forcing the salted
+    reduce on a 50%-one-key tail COSTS ~1.4x, bench.py --skew keyflood
+    rows), so salting stays manual; the table equals the replay oracle and
+    each commit adds at most one file per bucket."""
+    ev = _epoch_tail(flood_rows=205, uniq_rows=795, n_epochs=3)
+    table, results = _run_tail(spark, tmp_path, ev, "flood", n_buckets=32)
     assert len(results) == 3
     for r in results:
-        dup = r["events_applied"] / (r["events_applied"] - r["conflicts_resolved"])
-        assert dup < FUSE_DUP_MAX                       # dup gate would pass
-        assert r["max_bucket_share"] < FUSE_SKEW_MAX    # skew gate would pass
-        assert r["max_key_flood"] >= FUSE_FLOOD_MAX     # flood signal fires
+        assert r["conflicts_resolved"] == 204          # the flood folds to one row
         assert r["n_salts_used"] == 0                   # salting stays manual
-    # epoch 1 has no hint (combine by default); epochs 2-3 would have fused
-    # on dup/skew alone — the flood hint keeps them combine-first
-    assert [r["plan_shape"] for r in results] == ["combine"] * 3
+    _assert_one_file_per_bucket(table)
+    _assert_matches_oracle(table, ev)
 
-    # control: same tail shape with a sub-threshold flood fuses as before
-    ctl = _run_tail(spark, tmp_path,
-                    _epoch_tail(flood_rows=50, uniq_rows=950, n_epochs=3),
-                    "ctl")
-    assert all(r["max_key_flood"] < FUSE_FLOOD_MAX for r in ctl)
-    assert [r["plan_shape"] for r in ctl] == ["combine", "fused", "fused"]
+
+def test_epoch_plan_independent_of_input(spark, tmp_path, monkeypatch):
+    """A MOR epoch runs the same plan whatever its input: a unique-key tail
+    and a duplicated tail (4 writes per key per epoch) run the same number
+    of Spark jobs in every epoch, counted per job group."""
+    from investigraph_etl_spark.streaming import ingest as ingest_mod
+
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description",
+             "spark.job.interruptOnCancel")
+    groups: list[str] = []
+    real_apply = ingest_mod.apply_events_batch
+
+    def grouped_apply(*args, **kwargs):
+        group = f"{tmp_path.name}-epoch-{len(groups)}"
+        saved = [sc.getLocalProperty(p) for p in props]
+        sc.setJobGroup(group, group)
+        try:
+            return real_apply(*args, **kwargs)
+        finally:
+            for p, v in zip(props, saved):
+                sc.setLocalProperty(p, v)
+            groups.append(group)
+
+    monkeypatch.setattr(ingest_mod, "apply_events_batch", grouped_apply)
+    for tag, ev in (("uniq", _unique_tail()), ("dup", _duplicated_tail())):
+        _, results = _run_tail(spark, tmp_path, ev, tag, n_buckets=8)
+        assert len(results) == 3
+    tracker = sc.statusTracker()
+    jobs = [len(tracker.getJobIdsForGroup(g)) for g in groups]
+    assert len(jobs) == 6 and jobs[0] > 0
+    assert jobs == [jobs[0]] * 6

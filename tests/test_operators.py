@@ -623,3 +623,27 @@ def test_connected_components_clusters(spark):
     # canonical-survivor semantics: keep-set = one doc per component
     keep = {d for d, c in got.items() if d == c}
     assert keep == {1, 10, 20}
+
+
+def test_connected_components_fails_loudly_when_not_converged(spark):
+    """Labels move one hop per round. A 40-node chain whose smallest id
+    sits in the middle is 20 hops deep: the default max_iter closes it into
+    one cluster, max_iter=3 raises instead of returning split labels, and
+    so does the default on the same chain numbered end to end (39 hops)."""
+    import pytest as _pytest
+
+    from investigraph_etl_spark.operators.dedup import connected_components
+
+    def chain(order):
+        return spark.createDataFrame(list(zip(order, order[1:])),
+                                     "id_a long, id_b long")
+
+    centred = list(range(39, 0, -2)) + list(range(0, 40, 2))
+    assert sorted(centred) == list(range(40))
+    got = connected_components(chain(centred)).collect()
+    assert len(got) == 40 and {r["cluster_id"] for r in got} == {0}
+
+    with _pytest.raises(RuntimeError, match=r"max_iter=3 rounds: \d+ labels"):
+        connected_components(chain(centred), max_iter=3)
+    with _pytest.raises(RuntimeError, match="max_iter=25"):
+        connected_components(chain(list(range(40))))

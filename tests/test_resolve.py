@@ -38,28 +38,11 @@ def test_resolve_salted_identical(spark):
     pd.testing.assert_frame_equal(plain, salted, check_dtype=False)
 
 
-def test_resolve_packed_matches_oracle(spark):
-    ev = generate_events(GeneratorConfig(n_events=8000, seed=11))
-    got = _as_oracle_frame(resolve_lww(_spark_events(spark, ev), strategy="packed").toPandas())
-    want = replay_oracle(ev.drop(columns=["epoch"]))
-    pd.testing.assert_frame_equal(
-        got, want[["conv_id", "turn_idx", "role", "text", "tool", "ts"]], check_dtype=False
-    )
-
-
 def test_resolve_plans(spark):
-    """max_by: single agg (partial map-side), no window. packed: pure
-    HashAggregate, no sort anywhere — stays in whole-stage codegen."""
+    """max_by: single agg (partial map-side), no window."""
     ev = generate_events(GeneratorConfig(n_events=100, seed=1))
     df = _spark_events(spark, ev)
 
     plan = resolve_lww(df)._jdf.queryExecution().executedPlan().toString()
     assert "partial_max_by" in plan  # map-side combine before the shuffle
     assert "Window" not in plan
-
-    # packed reduces with plain max() over one string column: still a
-    # SortAggregate (var-length buffer), but partial agg applies and the sort
-    # comparator is a single binary compare instead of a struct walk.
-    packed = resolve_lww(df, strategy="packed")._jdf.queryExecution().executedPlan().toString()
-    assert "partial_max" in packed
-    assert "Window" not in packed
