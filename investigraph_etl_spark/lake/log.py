@@ -47,9 +47,6 @@ class Commit:
     # data skipping — lake/stats.py): {rel_path: {col: {min, max, nulls}}}
     stats: dict[str, Any] = field(default_factory=dict)
     stats_cols: list[str] | None = None  # set on the create commit
-    # key-membership skipping config (set on the create commit):
-    # {"col": <key column>, "bits": <bitmap width>} — lake/stats.py keysets
-    keyset: dict[str, Any] | None = None
     # identity of the key→bucket hash the data layout was written under
     # (set on the create and rebucket commits). The bucket function is part
     # of the PERSISTED format: a writer that buckets with a different hash
@@ -73,7 +70,6 @@ class Commit:
             "committed_at": self.committed_at,
             "stats": self.stats,
             "stats_cols": self.stats_cols,
-            "keyset": self.keyset,
             "bucket_fn": self.bucket_fn,
         }
 
@@ -90,7 +86,6 @@ class TableState:
     mode: str = "cow"              # "cow" | "mor"
     file_stats: dict[str, Any] = field(default_factory=dict)  # zone maps
     stats_cols: list[str] = field(default_factory=list)
-    keyset: dict[str, Any] | None = None  # key-membership skipping config
     bucket_fn: str | None = None  # layout hash identity (None = pre-stamp table)
 
 
@@ -152,7 +147,6 @@ class CommitLog:
         commits: list[Commit] = []
         file_stats: dict[str, Any] = {}
         stats_cols: list[str] = []
-        keyset: dict[str, Any] | None = None
         bucket_fn: str | None = None
 
         start = 0
@@ -167,7 +161,6 @@ class CommitLog:
             mode = cp.get("mode", "cow")
             file_stats = cp.get("file_stats", {})
             stats_cols = cp.get("stats_cols", [])
-            keyset = cp.get("keyset")
             bucket_fn = cp.get("bucket_fn")
             start = cp["version"]
 
@@ -182,8 +175,6 @@ class CommitLog:
             file_stats.update(c.get("stats") or {})
             if c.get("stats_cols") is not None:
                 stats_cols = c["stats_cols"]
-            if c.get("keyset") is not None:
-                keyset = c["keyset"]
             if c.get("bucket_fn") is not None:
                 bucket_fn = c["bucket_fn"]
             if c.get("schema"):
@@ -209,7 +200,6 @@ class CommitLog:
             mode=mode,
             file_stats=file_stats,
             stats_cols=stats_cols,
-            keyset=keyset,
             bucket_fn=bucket_fn,
         )
 
@@ -302,7 +292,6 @@ class CommitLog:
             ),
             "file_stats": state.file_stats,
             "stats_cols": state.stats_cols,
-            "keyset": state.keyset,
             "bucket_fn": state.bucket_fn,
         }
         self.fs.put_json(self._checkpoint_path(version), cp)

@@ -39,7 +39,6 @@ argument) — which makes the canonical "recent window" query
 
 from __future__ import annotations
 
-import base64
 import datetime as _dt
 import decimal as _decimal
 from typing import Any, Iterable, Mapping
@@ -48,9 +47,6 @@ from investigraph_etl_spark.storage import Storage, join
 
 #: predicate operators understood by both the pruner and the Spark filter
 OPS = ("=", "<", "<=", ">", ">=")
-
-#: per-file stats entry holding the key-membership bitmap (see keyset_*)
-KEYSET_KEY = "_keyset"
 
 
 def _canon(v: Any) -> Any:
@@ -137,56 +133,6 @@ def collect_file_stats(
         if file_stats:
             out[rel] = file_stats
     return out
-
-
-def pack_keyset(bit_positions: Iterable[int], n_bits: int) -> str:
-    """Pack set bit positions into a base64 bitmap for the commit log.
-
-    The keyset is a single-hash Bloom filter sized for FILE-level pruning:
-    each file records which of ``n_bits`` buckets its key hashes occupy
-    (``pmod(xxhash64(key), n_bits)`` — the engine's standard key hash). At
-    the default 16,384 bits (2 KB/file in the log) a file holding ~1,000
-    distinct keys is ~6% full, so a point lookup for an absent key keeps a
-    file with ~6% probability — membership pruning that min/max zone maps
-    structurally cannot do for hash-distributed keys (every file spans
-    nearly the whole key range). Same trick as Iceberg/parquet column Bloom
-    filters, lifted to the commit log so the driver prunes without touching
-    any file.
-    """
-    buf = bytearray((n_bits + 7) // 8)
-    for b in bit_positions:
-        buf[b >> 3] |= 1 << (b & 7)
-    return base64.b64encode(bytes(buf)).decode("ascii")
-
-
-def keyset_may_contain(entry: Mapping[str, Any] | None, bit: int) -> bool:
-    """Conservative membership test: files without a keyset entry (pre-keyset
-    commits) are always kept; a recorded bitmap proves absence exactly for
-    the bits it covers."""
-    if not entry:
-        return True
-    n = entry.get("n")
-    b64 = entry.get("b64")
-    if not n or b64 is None or bit >= n:
-        return True
-    raw = base64.b64decode(b64)
-    return bool(raw[bit >> 3] & (1 << (bit & 7)))
-
-
-def prune_files_keyset(
-    live_files: list[str],
-    file_stats: Mapping[str, Mapping[str, Any]],
-    bit: int,
-) -> tuple[list[str], int]:
-    """Keep only files whose key bitmap may contain ``bit``. MOR-safe by the
-    same atomicity argument as key-column zone maps: every generation of a
-    key sets the same bit, so its reduction group is kept or dropped whole."""
-    kept = [
-        f
-        for f in live_files
-        if keyset_may_contain((file_stats.get(f) or {}).get(KEYSET_KEY), bit)
-    ]
-    return kept, len(live_files) - len(kept)
 
 
 def _file_can_match(

@@ -42,11 +42,6 @@ Key design decisions, each driven by 100 TB scale:
   before the scan — the Iceberg-manifest-bounds / Delta-file-stats pattern
   (lake/stats.py; MOR prunes key columns only — payload bounds could drop an
   LWW winner).
-- **Key-membership skipping** (opt-in ``keyset_col``): point lookups on
-  hash-like keys defeat interval bounds, so each file additionally records
-  a key bitmap in the commit log (driver-side file pruning) and a parquet
-  column Bloom filter (reader-side row-group pruning) — Iceberg/parquet
-  Bloom parity, at one extra O(batch) pass per commit.
 
 Reference parity for the sink itself: keyed idempotent upsert store
 (/root/reference/investigraph/logic/load.py:25-31) and fragment append
@@ -57,6 +52,7 @@ from __future__ import annotations
 
 import time
 import uuid
+import warnings
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -66,12 +62,9 @@ from pyspark.sql import types as T
 from investigraph_etl_spark.cdc.events import KEY_COLS
 from investigraph_etl_spark.lake.log import Commit, CommitLog
 from investigraph_etl_spark.lake.stats import (
-    KEYSET_KEY,
     collect_file_stats,
-    pack_keyset,
     preds_to_column,
     prune_files,
-    prune_files_keyset,
     validate_preds,
 )
 from investigraph_etl_spark.profiling import phase
@@ -194,8 +187,8 @@ class LakeTable:
         mode: str = "cow",
         stats_cols: tuple[str, ...] | None = None,
         keyset_col: str | None = None,
-        keyset_bits: int = 16384,
-        keyset_bloom_ndv: int = 100_000,
+        keyset_bits: int | None = None,
+        keyset_bloom_ndv: int | None = None,
     ) -> "LakeTable":
         """Create an empty table (commit 1 = schema + layout + mode, no files).
 
@@ -205,17 +198,13 @@ class LakeTable:
         (lake/stats.py). Default: the key columns + ``ts``. Pass ``()`` to
         disable stats collection.
 
-        ``keyset_col``: opt-in key-membership skipping for point lookups.
-        Zone maps cannot prune ``conv_id = x`` — hash-distributed keys span
-        ~the full min/max range in every file — and bucket pruning still
-        keeps every file generation of x's bucket, so each write additionally
-        records a per-file key bitmap (``keyset_bits`` wide, default 2 KB in
-        the log; see lake/stats.py pack_keyset) that ``read(where=[(col,
-        "=", v)])`` uses to keep only files that may contain the key, and
-        data files get parquet column Bloom filters on the same column so
-        Spark's scan skips row groups inside kept files. Costs one extra
-        column-pruned O(batch) pass per commit — enable it on tables served
-        for point lookups, leave it off for pure-ingest throughput.
+        ``keyset_col``, ``keyset_bits``, ``keyset_bloom_ndv``: deprecated
+        and ignored (passing any of them emits a ``DeprecationWarning``).
+        They named a per-file key-bitmap tier that bucket pruning made
+        redundant for ``conv_id = k`` lookups, and that returned superseded
+        rows when the column was a MOR payload column. They are accepted
+        only so existing callers keep running, and will be removed once
+        ``perfbench/workloads.py`` stops passing them.
 
         ``mode``:
 
@@ -244,8 +233,13 @@ class LakeTable:
         )
         if stats_cols is None:
             stats_cols = tuple(key_cols) + (("ts",) if "ts" in schema.names else ())
-        if keyset_col is not None and keyset_col not in schema.names:
-            raise ValueError(f"keyset_col {keyset_col!r} not in schema")
+        if (keyset_col, keyset_bits, keyset_bloom_ndv) != (None, None, None):
+            warnings.warn(
+                "LakeTable.create: keyset_col, keyset_bits and keyset_bloom_ndv "
+                "are ignored (bucket pruning serves conv_id point lookups)",
+                DeprecationWarning,
+                stacklevel=2,
+            )
         t.log.commit(
             Commit(
                 version=1,
@@ -254,12 +248,6 @@ class LakeTable:
                 key_cols=list(key_cols),
                 mode=mode,
                 stats_cols=list(stats_cols),
-                keyset=(
-                    {"col": keyset_col, "bits": int(keyset_bits),
-                     "ndv": int(keyset_bloom_ndv)}
-                    if keyset_col is not None
-                    else None
-                ),
                 bucket_fn=BUCKET_FN,
             )
         )
@@ -352,52 +340,10 @@ class LakeTable:
         """Zone maps for freshly written files: one parquet-footer read per
         file through the storage interface (ranged GETs — O(KB) per file,
         driver-side, same cost class as the manifest LIST). Recorded in the
-        commit so ``read(where=...)`` can skip files without data-plane I/O.
-
-        When the table (state ``st``) has a ``keyset`` config, each file
-        additionally gets its key-membership bitmap (one extra column-pruned
-        Spark pass over the files just written — O(batch), opt-in at
-        create)."""
-        out: dict = {}
-        if st.stats_cols and added:
-            out = collect_file_stats(self.fs, self.data_dir, added, st.stats_cols)
-        if st.keyset and added:
-            # the keyset column is frozen (never widened), so the state's
-            # type is the type every added file was written with
-            dtype = T.StructType.fromJson(st.schema)[st.keyset["col"]].dataType
-            for rel, entry in self._collect_keysets(added, st.keyset, dtype).items():
-                out.setdefault(rel, {})[KEYSET_KEY] = entry
-        return out
-
-    def _collect_keysets(
-        self, added: list[str], ks: dict[str, Any], dtype: T.DataType
-    ) -> dict:
-        """Per-file key bitmaps for freshly written files: ONE aggregation
-        over just those files, reading only the key column (column-pruned
-        scan), grouped by source file — the per-commit cost of membership
-        skipping. The one-column schema is given, not inferred: inference
-        would cost a Spark job of its own per commit."""
-        n_bits = int(ks["bits"])
-        paths = [join(self.data_dir, rel) for rel in added]
-        rows = (
-            self.spark.read.schema(T.StructType([T.StructField(ks["col"], dtype)]))
-            .parquet(*paths)
-            .select(
-                F.input_file_name().alias("_f"),
-                F.pmod(F.xxhash64(F.col(ks["col"])), F.lit(n_bits))
-                .cast("int")
-                .alias("_b"),
-            )
-            .groupBy("_f")
-            .agg(F.collect_set("_b").alias("_bits"))
-            .collect()
-        )
-        out: dict = {}
-        for r in rows:
-            rel = next((a for a in added if r._f.endswith(a)), None)
-            if rel is not None:
-                out[rel] = {"n": n_bits, "b64": pack_keyset(r._bits, n_bits)}
-        return out
+        commit so ``read(where=...)`` can skip files without data-plane I/O."""
+        if not (st.stats_cols and added):
+            return {}
+        return collect_file_stats(self.fs, self.data_dir, added, st.stats_cols)
 
     def _prune_spec(self, st) -> tuple[set, set]:
         """(fully-prunable cols, monotone-only cols) for this table's mode.
@@ -415,52 +361,41 @@ class LakeTable:
         return prunable & set(st.key_cols), monotone
 
     def _pruned_files(self, st, preds) -> tuple[list[str], int]:
-        """Zone-map pruning, then bucket pruning for ``conv_id = k`` and
-        key-membership pruning for ``=`` on the keyset column (all MOR-safe:
-        each drops a key's generations all together or not at all;
-        lake/stats.py for the proofs)."""
+        """Zone-map pruning, then bucket pruning for ``conv_id = k`` (both
+        MOR-safe: each drops a key's generations all together or not at
+        all; lake/stats.py for the zone-map proofs)."""
         prunable, monotone = self._prune_spec(st)
         files, n = prune_files(st.live_files, st.file_stats, preds, prunable, monotone)
-        schema = T.StructType.fromJson(st.schema)
-        ks_col = st.keyset["col"] if st.keyset else None
-        # Each `=` literal is read in its column's PHYSICAL type: both hashes
-        # are type-sensitive, so e.g. an int literal against a string column
-        # would otherwise hash to the wrong bucket/bit and prune files that
-        # hold the key. A literal that does not cast (null) prunes nothing.
+        if st.n_buckets <= 1:
+            return files, n
+        # Each literal is read in conv_id's PHYSICAL type: murmur3 is
+        # type-sensitive, so e.g. an int literal against a string column
+        # would otherwise hash to the wrong bucket and prune files that hold
+        # the key. A literal that does not cast (null) prunes nothing.
+        dtype = T.StructType.fromJson(st.schema)["conv_id"].dataType.simpleString()
         args: dict[str, Any] = {}
-        hashes: list[tuple[str, str]] = []  # (kind, SQL over a literal)
+        buckets: list[str] = []
         for pcol, op, val in preds:
-            bucketed = pcol == "conv_id" and st.n_buckets > 1
-            if op != "=" or val is None or not (bucketed or pcol == ks_col):
+            if pcol != "conv_id" or op != "=" or val is None:
                 continue
             k = f"k{len(args)}"
             args[k] = val
-            lit = f"try_cast(:{k} as {schema[pcol].dataType.simpleString()})"
-            if bucketed:
-                h = _bucket_sql(st.n_buckets, lit)
-                hashes.append(("bucket", f"if({lit} is null, null, {h})"))
-            if pcol == ks_col:
-                h = f"pmod(xxhash64({lit}), {int(st.keyset['bits'])})"
-                hashes.append(("keyset", f"if({lit} is null, null, {h})"))
-        if not hashes:
+            lit = f"try_cast(:{k} as {dtype})"
+            buckets.append(f"if({lit} is null, null, {_bucket_sql(st.n_buckets, lit)})")
+        if not buckets:
             return files, n
-        # ONE 1-row select computes every bucket and bit BY Spark, so they
-        # are bit-identical to the write side's murmur3/xxhash64. Over a
-        # VALUES row the optimizer folds it to constants on the driver: no
-        # Spark job per lookup.
+        # ONE 1-row select computes every bucket BY Spark, so they are
+        # bit-identical to the write side's murmur3. Over a VALUES row the
+        # optimizer folds it to constants on the driver: no Spark job per
+        # lookup.
         row = self.spark.sql(
-            f"SELECT {', '.join(h for _, h in hashes)} FROM VALUES (0)", args=args
+            f"SELECT {', '.join(buckets)} FROM VALUES (0)", args=args
         ).first()
-        for (kind, _), h in zip(hashes, row):
-            if h is None:
-                continue
-            if kind == "bucket":
-                kept = [f for f in files if _bucket_of(f) in (h, None)]
+        for b in row:
+            if b is not None:
+                kept = [f for f in files if _bucket_of(f) in (b, None)]
                 n += len(files) - len(kept)
                 files = kept
-            else:
-                files, n2 = prune_files_keyset(files, st.file_stats, h)
-                n += n2
         return files, n
 
     def files_for(
@@ -468,9 +403,8 @@ class LakeTable:
         where: list[tuple[str, str, Any]] | None = None,
         at_version: int | None = None,
     ) -> tuple[list[str], int]:
-        """(files read(where=...) would scan, number pruned by zone maps,
-        buckets and key bitmaps) — the observability/test surface for data
-        skipping."""
+        """(files read(where=...) would scan, number pruned by zone maps and
+        buckets) — the observability/test surface for data skipping."""
         st = self._state(at_version)
         if not where:
             return list(st.live_files), 0
@@ -506,13 +440,12 @@ class LakeTable:
         (ops ``= < <= > >=``). Files whose recorded zone maps prove no match
         are skipped BEFORE the scan (lake/stats.py); ``conv_id = k`` further
         keeps only the files of k's bucket (under the ``n_buckets`` of the
-        version read, so time travel across ``rebucket()`` prunes right),
-        and ``=`` on a keyset column only files whose key bitmap may hold
-        the literal. The predicate is then also applied as a normal Spark
-        filter, so the result is identical to filtering a full read —
-        pruning only removes I/O. On MOR tables only key-column predicates
-        prune files (a payload bound could drop the LWW winner while keeping
-        a stale loser); payload predicates still filter, post-reduction.
+        version read, so time travel across ``rebucket()`` prunes right).
+        The predicate is then also applied as a normal Spark filter, so the
+        result is identical to filtering a full read — pruning only removes
+        I/O. On MOR tables only key-column predicates prune files (a payload
+        bound could drop the LWW winner while keeping a stale loser);
+        payload predicates still filter, post-reduction.
         """
         st = self._state(at_version)
         schema = T.StructType.fromJson(st.schema)
@@ -676,16 +609,11 @@ class LakeTable:
         self,
         current: T.StructType,
         batch_cols: list[tuple[str, T.DataType]],
-        frozen_cols: frozenset[str] = frozenset(),
     ) -> T.StructType:
         """Widen the physical schema with new payload columns (additive) and
         lossless type promotions (int→long, float→double — ``_widens``).
         A batch NARROWER than the table is fine too (it casts up at write).
-        Anything else — type change across families, drops — is rejected.
-
-        ``frozen_cols`` may not change type at all: the keyset column's
-        bitmaps (and parquet Blooms) hash the PHYSICAL width, so widening it
-        would make every previously recorded bitmap silently wrong."""
+        Anything else — type change across families, drops — is rejected."""
         names = {f.name for f in current.fields}
         fields = list(current.fields)
         hidden = [f for f in fields if f.name in HIDDEN_COLS]
@@ -700,13 +628,6 @@ class LakeTable:
                 if existing == dtype or self._widens(dtype, existing):
                     continue  # identical, or narrower batch → casts up
                 if self._widens(existing, dtype):
-                    if name in frozen_cols:
-                        raise TypeError(
-                            f"column {name!r} is the keyset column — widening "
-                            f"it ({existing.simpleString()} → "
-                            f"{dtype.simpleString()}) would invalidate every "
-                            "recorded key bitmap (xxhash64 is width-sensitive)"
-                        )
                     visible = [
                         T.StructField(name, dtype, True) if f.name == name else f
                         for f in visible
@@ -731,7 +652,6 @@ class LakeTable:
         n_buckets: int,
         n_touched: int | None = None,
         cluster_by: list[str] | None = None,
-        bloom_keyset: dict | None = None,
     ) -> list[str]:
         """Write df (must contain the bucket col) into data/, return new rel paths.
 
@@ -774,20 +694,6 @@ class LakeTable:
         writer = out.write.mode("overwrite")
         if self.max_records_per_file:
             writer = writer.option("maxRecordsPerFile", self.max_records_per_file)
-        if bloom_keyset:
-            # Parquet column Bloom filter (keyset tables): Spark's reader
-            # skips row groups on `col = v` pushdown inside files the
-            # commit-log bitmap kept — the second tier of point-lookup I/O.
-            # NDV must be set: parquet-mr's default sizes the filter for
-            # ~1M distinct values (1 MB per file regardless of content).
-            col = bloom_keyset["col"]
-            writer = (
-                writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-                .option(
-                    f"parquet.bloom.filter.expected.ndv#{col}",
-                    str(bloom_keyset.get("ndv", 100_000)),
-                )
-            )
         with phase("write_job"):
             writer.partitionBy(_BUCKET_COL).parquet(dest)
 
@@ -909,8 +815,7 @@ class LakeTable:
             for f in resolved.schema.fields
             if f.name not in {*KEY_COLS, "op", "ts", "seq"}
         ]
-        frozen = frozenset({st.keyset["col"]}) if st.keyset else frozenset()
-        physical = self._evolve_schema(current, payload_types, frozen)
+        physical = self._evolve_schema(current, payload_types)
         payload_names = [f.name for f in physical.fields if f.name not in {*KEY_COLS, "ts", *HIDDEN_COLS}]
 
         # Enforce the physical schema on every batch column (callers may hand
@@ -945,7 +850,6 @@ class LakeTable:
                 out,
                 st.n_buckets,
                 n_touched=len(touched) if touched is not None else None,
-                bloom_keyset=st.keyset,
             )
             if touched is None:  # free: the written paths name the buckets
                 touched = sorted({_bucket_of(f) for f in added})
@@ -968,8 +872,7 @@ class LakeTable:
 
             merged = resolve_lww(existing_ev.unionByName(batch_ev))
             out = self._events_to_physical(merged, payload_names, st.n_buckets)
-            added = self._write_data(out, st.n_buckets, n_touched=len(touched),
-                                     bloom_keyset=st.keyset)
+            added = self._write_data(out, st.n_buckets, n_touched=len(touched))
             removed_set = set(touched)
             removed = [f for f in st.live_files if _bucket_of(f) in removed_set]
 
@@ -1010,7 +913,7 @@ class LakeTable:
             # under the pre-race column order stay valid).
             base = T.StructType.fromJson(new_st.schema)
             try:
-                widened = self._evolve_schema(base, payload_types, frozen)
+                widened = self._evolve_schema(base, payload_types)
             except TypeError:
                 self._discard_files(commit.added)
                 raise
@@ -1110,7 +1013,6 @@ class LakeTable:
             st.n_buckets,
             n_touched=len(buckets),
             cluster_by=list(st.key_cols) if cluster else None,
-            bloom_keyset=st.keyset,
         )
         commit = Commit(
             version=st.version + 1,
@@ -1192,7 +1094,6 @@ class LakeTable:
             reduced,
             n_buckets,
             cluster_by=list(st.key_cols) if cluster else None,
-            bloom_keyset=st.keyset,
         )
         commit = Commit(
             version=st.version + 1,
@@ -1266,8 +1167,7 @@ class LakeTable:
             F.lit(-1).cast("long").alias("_seq"),
             F.lit(False).alias("_deleted"),
         ).withColumn(_BUCKET_COL, _bucket_expr(st.n_buckets))
-        added = self._write_data(out, st.n_buckets,
-                                 bloom_keyset=st.keyset)
+        added = self._write_data(out, st.n_buckets)
         commit = Commit(
             version=st.version + 1,
             added=added,

@@ -145,6 +145,20 @@ def sample_hash_sql(
 _STRATA_BUCKETS = 10_000
 
 
+def _strata_threshold(frac: float) -> int:
+    """Buckets (of ``_STRATA_BUCKETS``) a fraction keeps. A positive
+    fraction that rounds to 0 buckets would silently sample nothing, so it
+    raises instead."""
+    thr = int(round(frac * _STRATA_BUCKETS))
+    if frac > 0 and thr == 0:
+        raise ValueError(
+            f"sampling fraction {frac!r} rounds to 0 of the sampler's "
+            f"{_STRATA_BUCKETS} hash buckets (its resolution); it would "
+            "keep no rows"
+        )
+    return thr
+
+
 def sample_stratified(
     df: DataFrame,
     group_col: str,
@@ -166,11 +180,11 @@ def sample_stratified(
     bucket = _hash_mod(F.col(id_col), _STRATA_BUCKETS, kernel, salt)
     thr = None
     for g, frac in sorted(fractions.items()):
-        t = F.lit(int(round(frac * _STRATA_BUCKETS)))
+        t = F.lit(_strata_threshold(frac))
         thr = F.when(F.col(group_col) == g, t) if thr is None else thr.when(
             F.col(group_col) == g, t
         )
-    dflt = F.lit(int(round(default * _STRATA_BUCKETS)))
+    dflt = F.lit(_strata_threshold(default))
     thr = dflt if thr is None else thr.otherwise(dflt)
     return df.where(bucket < thr)
 
@@ -191,14 +205,11 @@ def sample_stratified_sql(
         f" % {_STRATA_BUCKETS}"
     )
     whens = " ".join(
-        f"WHEN '{g}' THEN {int(round(frac * _STRATA_BUCKETS))}"
+        f"WHEN '{g}' THEN {_strata_threshold(frac)}"
         for g, frac in sorted(fractions.items())
     )
-    case = (
-        f"CASE {group_expr} {whens} ELSE {int(round(default * _STRATA_BUCKETS))} END"
-        if whens
-        else f"{int(round(default * _STRATA_BUCKETS))}"
-    )
+    dflt = _strata_threshold(default)
+    case = f"CASE {group_expr} {whens} ELSE {dflt} END" if whens else f"{dflt}"
     return f"SELECT {cols} FROM {table} WHERE {h} < {case}"
 
 

@@ -521,8 +521,8 @@ FROM {table}
 # data. C444 (no chroma subsampling) keeps the container lossless, so the
 # round-trip test is byte-exact; the decoder also handles C420 (the spec
 # default) with nearest-neighbor chroma upsampling. Like the image codecs,
-# demuxers live in a sniff-by-magic registry — a pyav-backed MP4/WebM
-# demuxer self-registers when pyav is importable.
+# demuxers live in a sniff-by-magic registry — a pyav-backed MP4 demuxer
+# self-registers when pyav is importable.
 
 
 def _y4m_encode(width: int, height: int, fps: int, frames: list) -> bytes:
@@ -568,7 +568,7 @@ def _y4m_header(buf: bytes) -> tuple[int, int, float, int, int, int]:
     if cspace.startswith(b"C444"):
         cw, ch = w, h
     elif cspace.startswith(b"C420"):
-        cw, ch = w // 2, h // 2
+        cw, ch = (w + 1) // 2, (h + 1) // 2  # odd sizes round up
     else:
         raise ValueError(f"unsupported y4m colorspace {cspace!r}")
     return w, h, fps, cw, ch, nl + 1
@@ -670,9 +670,8 @@ register_demuxer(
 
 
 def _pyav_demux(buf: bytes) -> tuple[int, int, float, list]:
-    """MP4/WebM demux via pyav — registered only when importable (the
-    sandbox image has no pyav; deployment images that do get real MP4 for
-    free through the same registry)."""
+    """MP4 demux via pyav — registered only when pyav is importable
+    (images that have it get real MP4 through the same registry)."""
     import io
 
     import av  # gated

@@ -6,13 +6,18 @@ MOR-safe for the same reason key zone maps are. Every test proves the pruned
 read equal to full-scan + filter; pruning only removes I/O.
 
 Also here: the COW touched-bucket regression for non-string keys (the rule
-must see the PHYSICAL-typed key), and the listing-job width ``get_spark``
-clamps to 2 × defaultParallelism.
+must see the PHYSICAL-typed key), the listing-job width ``get_spark``
+clamps to 2 × defaultParallelism, and tables whose logs still carry the
+retired keyset tier's config and per-file key bitmaps.
 """
 
 from __future__ import annotations
 
+import base64
+
 import pandas as pd
+import pytest
+from pyspark.sql import types as T
 
 from investigraph_etl_spark.cdc.events import TRANSCRIPT_SCHEMA
 from investigraph_etl_spark.cdc.resolve import resolve_lww
@@ -115,34 +120,142 @@ def test_time_travel_across_rebucket_prunes_by_each_versions_layout(spark, tmp_t
         _assert_one_bucket(t, spark, conv, 8)
 
 
-def test_bucket_and_keyset_pruning_compose(spark, tmp_path):
-    def hexid(c):  # hash-like ids: zone maps keep every file
-        return format((c * 2654435761) % 2**32, "08x")
+def test_lookup_after_compaction_and_vacuum(spark, tmp_table_root):
+    t = _fill(spark, tmp_table_root, mode="mor")
+    t.compact()
+    t.vacuum(orphan_grace_s=0.0)
+    assert len(t._state().live_files) == 4  # one compacted file per bucket
+    for conv in ("c0", "c5", "c11"):
+        _assert_one_bucket(t, spark, conv, 4)
 
-    plain = _fill(spark, str(tmp_path / "plain"), n_epochs=6, n_convs=16,
-                  conv=hexid)
-    keyed = _fill(spark, str(tmp_path / "keyed"), n_epochs=6, n_convs=16,
-                  conv=hexid, keyset_col="conv_id")
-    # each epoch's batch is a fresh set of keys in the keyed table, so the
-    # key bitmap can drop generations of the key's own bucket too
-    seq = 1000
-    for e in range(6, 9):
+
+def _assert_lookup(t, spark, conv, preds, cond):
+    """``conv_id = conv`` plus ``preds`` keeps only conv's bucket and equals
+    the full-scan filter ``cond``; returns the rows."""
+    kept, _ = t.files_for(where=[("conv_id", "=", conv), *preds])
+    assert {_bucket_of(f) for f in kept} <= {_bucket(spark, conv, 4)}
+    got = _rows(t.read(where=[("conv_id", "=", conv), *preds]))
+    assert got == _rows(t.read().filter(f"conv_id = '{conv}' and ({cond})"))
+    return got
+
+
+def test_lookup_with_stamp_predicate(spark, tmp_table_root):
+    """``conv_id = k`` composes with the MOR-safe ``ts >=`` zone-map rule:
+    each epoch inserts fresh keys, and epoch 5 updates an old one."""
+    t = LakeTable.create(spark, tmp_table_root, TRANSCRIPT_SCHEMA, n_buckets=4,
+                         mode="mor")
+    t.compact_threshold = 10**9
+    seq = 0
+    for e in range(6):
         rows = []
-        for c in range(16):
+        for c in range(4):
             seq += 1
-            rows.append(_r("upsert", hexid(100 * e + c), 0, f"n{e}.{c}", e, seq))
-        keyed.merge(_ev(spark, rows), app_id="x", epoch_id=e)
-    target = hexid(7)
-    b = _bucket(spark, target, 4)
-    kept_plain, _ = plain.files_for(where=[("conv_id", "=", target)])
-    kept_keyed, pruned_keyed = keyed.files_for(where=[("conv_id", "=", target)])
-    in_bucket = [f for f in keyed._state().live_files if _bucket_of(f) == b]
-    assert {_bucket_of(f) for f in kept_plain} == {b}
-    assert set(kept_keyed) < set(in_bucket)  # bitmap prunes inside the bucket
-    assert pruned_keyed == len(keyed._state().live_files) - len(kept_keyed)
-    want = [(target, 0, "t5.7")]
-    assert _rows(keyed.read(where=[("conv_id", "=", target)])) == want
-    assert _rows(plain.read(where=[("conv_id", "=", target)])) == want
+            rows.append(_r("insert", f"c{c}-{e}", 0, f"t{e}.{c}", e, seq))
+        if e == 5:
+            seq += 1
+            rows.append(_r("update", "c3-0", 0, "late", e, seq))
+        t.merge(_ev(spark, rows), app_id="x", epoch_id=e)
+    cutoff = T0 + pd.Timedelta(hours=3)
+    cond = f"ts >= '{cutoff}'"
+    stamp = [("ts", ">=", cutoff)]
+    assert _assert_lookup(t, spark, "c2-4", stamp, cond) == [("c2-4", 0, "t4.2")]
+    assert _assert_lookup(t, spark, "c0-1", stamp, cond) == []
+    assert _assert_lookup(t, spark, "c3-0", stamp, cond) == [("c3-0", 0, "late")]
+
+
+def test_keyset_options_ignored_and_payload_lookup_sees_winner(spark, tmp_path):
+    """Regression: ``keyset_col`` on a MOR payload column used to prune by
+    per-file key bitmaps, which dropped the LWW winner's generation and
+    returned the superseded row. The keyset options are now deprecated and
+    ignored."""
+    schema = T.StructType([
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("turn_idx", T.IntegerType(), False),
+        T.StructField("uid", T.IntegerType(), True),
+        T.StructField("ts", T.TimestampType(), True),
+    ])
+    for i, kw in enumerate(({"keyset_bits": 16384}, {"keyset_bloom_ndv": 2000})):
+        with pytest.warns(DeprecationWarning, match="keyset"):
+            LakeTable.create(spark, str(tmp_path / f"w{i}"), schema, mode="mor", **kw)
+    with pytest.warns(DeprecationWarning, match="keyset"):
+        t = LakeTable.create(spark, str(tmp_path / "t"), schema, n_buckets=2,
+                             mode="mor", keyset_col="uid")
+    t.compact_threshold = 10**9
+
+    def ev(uid, hours, seq):
+        pdf = pd.DataFrame([{"op": "upsert", "conv_id": "c1", "turn_idx": 0,
+                             "uid": uid, "ts": T0 + pd.Timedelta(hours=hours),
+                             "seq": seq}])
+        pdf["uid"] = pdf["uid"].astype("int32")
+        return resolve_lww(spark.createDataFrame(pdf))
+
+    t.merge(ev(7, 0, 1), app_id="x", epoch_id=0)
+    t.merge(ev(8, 1, 2), app_id="x", epoch_id=1)
+
+    def uids(df):
+        return [(r.conv_id, r.uid) for r in df.collect()]
+
+    assert uids(t.read(where=[("uid", "=", 7)])) == uids(t.read().filter("uid = 7")) == []
+    assert uids(t.read(where=[("uid", "=", 8)])) == [("c1", 8)]
+
+
+def test_old_keyset_log_still_opens_reads_merges_compacts_vacuums(
+    spark, tmp_table_root, monkeypatch
+):
+    """A log written by the retired keyset tier: ``keyset`` config on the
+    create commit and on a checkpoint, ``_keyset`` bitmaps in one merge
+    commit's file stats. The bitmaps are all zero, so code that still
+    honoured them would prune every file of that commit — which holds the
+    only generation of c6..c11."""
+    from investigraph_etl_spark.lake import log as log_mod
+
+    monkeypatch.setattr(log_mod, "CHECKPOINT_EVERY", 4)
+    cfg = {"col": "conv_id", "bits": 16384, "ndv": 2000}
+    zero = {"n": 16384, "b64": base64.b64encode(bytes(16384 // 8)).decode()}
+    t = LakeTable.create(spark, tmp_table_root, TRANSCRIPT_SCHEMA, n_buckets=4,
+                         mode="mor")
+    log = t.log
+
+    def edit(path, fn):
+        doc = log.fs.get_json(path)
+        fn(doc)
+        log.fs.put_json(path, doc)
+
+    def add_bitmaps(c):
+        for rel in c["added"]:
+            c["stats"].setdefault(rel, {})["_keyset"] = zero
+
+    def merge(epoch, convs):
+        rows = [_r("upsert", f"c{c}", 0, f"t{epoch}.{c}", epoch, 100 * epoch + c)
+                for c in convs]
+        t.merge(_ev(spark, rows), app_id="x", epoch_id=epoch)
+
+    edit(log._version_path(1), lambda c: c.update(keyset=cfg))
+    merge(0, range(12))                                    # version 2
+    edit(log._version_path(2), add_bitmaps)
+    merge(1, range(6))
+    merge(2, range(6))                                     # version 4
+    assert log._list_checkpoints() == [4]
+    edit(log._checkpoint_path(4), lambda cp: cp.update(keyset=cfg))
+    cp = log.fs.get_json(log._checkpoint_path(4))
+    assert sum("_keyset" in s for s in cp["file_stats"].values()) == 4
+
+    t = LakeTable.load(spark, tmp_table_root)
+    t.compact_threshold = 10**9
+
+    def check(text_of):
+        for c in (0, 7, 11):
+            got = _assert_lookup(t, spark, f"c{c}", [], "true")
+            assert got == [(f"c{c}", 0, text_of(c))]
+        assert len(_rows(t.read())) == 12
+
+    check(lambda c: f"t{2 if c < 6 else 0}.{c}")
+    merge(3, [7])
+    check(lambda c: {0: "t2.0", 7: "t3.7", 11: "t0.11"}[c])
+    assert t.compact()["compacted_buckets"] > 0
+    assert t.vacuum(orphan_grace_s=0.0) > 0
+    assert len(t._state().live_files) <= 4
+    check(lambda c: {0: "t2.0", 7: "t3.7", 11: "t0.11"}[c])
 
 
 def test_cow_merge_with_int_keys_replaces_string_keyed_rows(spark, tmp_table_root):
@@ -177,12 +290,12 @@ def _stage_tasks(spark, group, fn):
 
 
 def test_lookup_planning_runs_no_spark_job(spark, tmp_path):
-    t = _fill(spark, str(tmp_path / "t"), keyset_col="conv_id")
+    t = _fill(spark, str(tmp_path / "t"))
 
     def prune():
         return t.files_for(where=[("conv_id", "=", "c5")])
 
-    # the bucket and the key bit fold to constants on the driver
+    # the bucket folds to a constant on the driver
     assert _stage_tasks(spark, "lookup-planning", prune) == []
     kept, _ = prune()
     assert {_bucket_of(f) for f in kept} == {_bucket(spark, "c5", 4)}

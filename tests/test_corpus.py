@@ -5,6 +5,7 @@ corpus_* registry entries."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from investigraph_etl_spark.operators.corpus import (
@@ -286,7 +287,10 @@ def test_sample_stratified_rates_and_determinism(spark):
     """Per-group deterministic sampling: fraction 1.0 keeps the whole group,
     0.0 drops it entirely, mid fractions land near their rate; identical
     output across reruns and kernels' exactness properties hold."""
-    from investigraph_etl_spark.operators.corpus import sample_stratified
+    from investigraph_etl_spark.operators.corpus import (
+        sample_stratified,
+        sample_stratified_sql,
+    )
 
     SF_DOCS = "/root/testdata/sf0.01/documents.parquet"
     docs = spark.read.parquet(SF_DOCS).select("doc_id", "lang")
@@ -310,3 +314,10 @@ def test_sample_stratified_rates_and_determinism(spark):
         a = sorted(r["doc_id"] for r in out.collect())
         b = sorted(r["doc_id"] for r in out.collect())
         assert a == b
+    # a positive fraction that rounds to 0 of the 10,000 hash buckets would
+    # keep no rows: it fails loudly on both faces, group or default
+    for fractions, default in (({"en": 1e-5}, 0.0), ({"en": 0.2}, 4e-5)):
+        with pytest.raises(ValueError, match="resolution"):
+            sample_stratified(docs, "lang", fractions, default=default)
+        with pytest.raises(ValueError, match="resolution"):
+            sample_stratified_sql(fractions=fractions, default=default)

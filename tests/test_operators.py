@@ -588,6 +588,13 @@ def test_y4m_roundtrip_and_format_rules():
     assert got[0].shape == (4, 4, 3)
     assert got[0][0, 0, 0] == 0 and got[0][3, 3, 0] == 15
     assert (got[0][:, :, 1] == 0x80).all()  # upsampled chroma
+    # odd W/H: C420 chroma planes round up to ceil(W/2) × ceil(H/2)
+    odd = (b"YUV4MPEG2 W3 H3 F1:1 C420jpeg\n"
+           b"FRAME\n" + bytes(range(9)) + bytes([10, 20, 30, 40]) + b"\x7f" * 4)
+    w, h, fps, got = _y4m_decode(odd)
+    assert (w, h) == (3, 3) and got[0].shape == (3, 3, 3)
+    assert got[0][:, :, 0].ravel().tolist() == list(range(9))
+    assert got[0][:, :, 1].tolist() == [[10, 10, 20], [10, 10, 20], [30, 30, 40]]
 
     with _pytest.raises(ValueError, match="no demuxer"):
         demux_video(b"\x00\x01\x02 not a container")

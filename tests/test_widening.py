@@ -98,35 +98,6 @@ def test_cross_family_change_still_rejected(spark, tmp_path):
                 app_id="x", epoch_id=1)
 
 
-def test_keyset_column_widening_rejected(spark, tmp_path):
-    """Widening the keyset column would silently invalidate every recorded
-    key bitmap (xxhash64 hashes the physical width) — it must raise."""
-    import pyspark.sql.types as T
-
-    schema = T.StructType([
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("uid", T.IntegerType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-    ])
-    t = LakeTable.create(spark, str(tmp_path / "t"), schema, n_buckets=2,
-                         mode="mor", keyset_col="uid")
-    t.compact_threshold = 10**9
-
-    def ev(uid_dtype, uid, conv, seq):
-        pdf = pd.DataFrame([{"op": "insert", "conv_id": conv, "turn_idx": 0,
-                             "uid": uid, "ts": T0, "seq": seq}])
-        pdf["uid"] = pdf["uid"].astype(uid_dtype)
-        return resolve_lww(spark.createDataFrame(pdf))
-
-    t.merge(ev("int32", 7, "c1", 1), app_id="x", epoch_id=0)
-    with pytest.raises(TypeError, match="keyset column"):
-        t.merge(ev("int64", 8, "c2", 2), app_id="x", epoch_id=1)
-    # non-keyset columns still widen fine elsewhere (covered above); the
-    # table remains readable and prunable after the rejected batch
-    assert [r.uid for r in t.read(where=[("uid", "=", 7)]).collect()] == [7]
-
-
 def test_changelog_and_stream_read_across_widening(spark, tmp_path):
     from investigraph_etl_spark.lake import stream_source
 
