@@ -111,6 +111,41 @@ def test_int_literal_against_string_key(spark, tmp_path):
     assert got == _rows(t.read().filter("conv_id = 7005")) == [("7005", 0, "t3.5")]
 
 
+def test_bucket_and_keyset_pruning_compose(spark, tmp_path):
+    """A table created with the deprecated ``keyset_col`` prunes exactly like
+    a plain one: the whole key bucket, every generation of it, and nothing
+    inside it — the retired key bitmaps pruned there and lost MOR winners."""
+    def hexid(c):  # hash-like ids: zone maps keep every file
+        return format((c * 2654435761) % 2**32, "08x")
+
+    plain = _fill(spark, str(tmp_path / "plain"), n_epochs=6, n_convs=16,
+                  conv=hexid)
+    with pytest.warns(DeprecationWarning, match="keyset"):
+        keyed = _fill(spark, str(tmp_path / "keyed"), n_epochs=6, n_convs=16,
+                      conv=hexid, keyset_col="conv_id")
+    # each later batch is a fresh set of keys: generations of the target's
+    # bucket that do not hold the target stay in the read all the same
+    seq = 1000
+    for e in range(6, 9):
+        rows = []
+        for c in range(16):
+            seq += 1
+            rows.append(_r("upsert", hexid(100 * e + c), 0, f"n{e}.{c}", e, seq))
+        keyed.merge(_ev(spark, rows), app_id="x", epoch_id=e)
+    target = hexid(7)
+    b = _bucket(spark, target, 4)
+    kept_plain, _ = plain.files_for(where=[("conv_id", "=", target)])
+    kept_keyed, pruned_keyed = keyed.files_for(where=[("conv_id", "=", target)])
+    in_bucket = [f for f in keyed._state().live_files if _bucket_of(f) == b]
+    assert {_bucket_of(f) for f in kept_plain} == {b}
+    assert sorted(kept_keyed) == sorted(in_bucket)
+    assert len(kept_keyed) > len(kept_plain)  # the later generations
+    assert pruned_keyed == len(keyed._state().live_files) - len(kept_keyed)
+    want = [(target, 0, "t5.7")]
+    assert _rows(keyed.read(where=[("conv_id", "=", target)])) == want
+    assert _rows(plain.read(where=[("conv_id", "=", target)])) == want
+
+
 def test_time_travel_across_rebucket_prunes_by_each_versions_layout(spark, tmp_table_root):
     t = _fill(spark, tmp_table_root, mode="mor", n_buckets=4)
     before = t.version

@@ -1,11 +1,11 @@
-"""Key-membership skipping: per-file key bitmaps in the commit log prune
-point-lookup reads (`conv_id = x`) that zone maps structurally cannot —
-hash-distributed keys span ~the full min/max range in every file, so
-interval pruning keeps everything while membership pruning keeps only the
-files that actually contain the key's hash bit.
+"""Point lookups on tables created with the deprecated keyset options.
 
-Results are proven identical to full-scan + filter in every test; the
-bitmap only removes I/O (a missing/absent entry keeps the file).
+``keyset_col`` once added per-file key bitmaps that pruned ``conv_id = x``
+reads inside a bucket. The option is now ignored (with a
+``DeprecationWarning``): bucket pruning alone serves these lookups, keeping
+every generation of the key's bucket, which is what keeps MOR reads correct.
+
+Every test proves the lookup equal to full-scan + filter.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ import pytest
 
 from investigraph_etl_spark.cdc.events import TRANSCRIPT_SCHEMA
 from investigraph_etl_spark.cdc.resolve import resolve_lww
-from investigraph_etl_spark.lake.table import LakeTable
+from investigraph_etl_spark.lake.table import LakeTable, _bucket_of
 
 T0 = pd.Timestamp("2025-03-01")
 
@@ -30,10 +30,20 @@ def _r(op, conv, turn, text, hours, seq):
             "ts": T0 + pd.Timedelta(hours=hours), "seq": seq}
 
 
-def _table(spark, root, n_epochs=6, convs_per_epoch=4, **create_kw):
-    t = LakeTable.create(spark, root, TRANSCRIPT_SCHEMA, n_buckets=2,
-                         mode="mor", keyset_col="conv_id", **create_kw)
+def _bucket(spark, conv, n):
+    return spark.sql(f"select pmod(hash('{conv}'), {n})").first()[0]
+
+
+def _create(spark, root):
+    with pytest.warns(DeprecationWarning, match="keyset"):
+        t = LakeTable.create(spark, root, TRANSCRIPT_SCHEMA, n_buckets=2,
+                             mode="mor", keyset_col="conv_id")
     t.compact_threshold = 10**9
+    return t
+
+
+def _table(spark, root, n_epochs=6, convs_per_epoch=4):
+    t = _create(spark, root)
     seq = 0
     for e in range(n_epochs):
         rows = []
@@ -58,90 +68,38 @@ def _full_filter(t, conv):
     )
 
 
+def _assert_key_bucket_only(spark, t, key):
+    """``conv_id = key`` keeps only files of key's bucket (zone maps may drop
+    some of those too) and prunes every file of the other bucket; returns
+    the pruned-file count."""
+    live = t._state().live_files
+    kept, pruned = t.files_for(where=[("conv_id", "=", key)])
+    b = _bucket(spark, str(key), 2)
+    assert {_bucket_of(f) for f in kept} <= {b}
+    assert pruned == len(live) - len(kept)
+    assert pruned >= sum(_bucket_of(f) != b for f in live)
+    return pruned
+
+
 def test_point_lookup_prunes_and_matches_full_scan(spark, tmp_table_root):
     t = _table(spark, tmp_table_root)
-    total = len(t._state().live_files)
-    kept, pruned = t.files_for(where=[("conv_id", "=", "c1-3")])
-    # interleaved ids put every key inside every file's min/max range, so
-    # only the membership bitmap can prune — and it keeps ~one epoch's file
-    assert pruned > 0 and len(kept) < total
+    # the bucket rule drops every file of the other bucket
+    assert _assert_key_bucket_only(spark, t, "c1-3") > 0
     assert _lookup(t, "c1-3") == _full_filter(t, "c1-3") == [("c1-3", 0, "t3.1")]
 
 
 def test_absent_key_prunes_everything_or_fp_only(spark, tmp_table_root):
     t = _table(spark, tmp_table_root)
-    # absent key chosen INSIDE every file's [min, max] so zone maps keep all
-    kept, pruned = t.files_for(where=[("conv_id", "=", "c1-99")])
-    assert pruned > 0  # membership pruning fires even though zone maps can't
-    assert _lookup(t, "c1-99") == []  # correctness regardless of FPs
-
-
-def _hexid(c, e):
-    """Deterministic hash-like id: spread across the space like real
-    conversation ids (uuids), the case where interval bounds stop working."""
-    return format((c * 2654435761 + e * 40503) % 2**32, "08x")
-
-
-def test_membership_beats_zone_maps_on_hashlike_ids(spark, tmp_path):
-    """Control: same hash-like id corpus twice, with and without keysets.
-    Each file's min/max spans most of the id space (16 uniform keys/epoch),
-    so interval pruning keeps almost everything; the membership bitmap
-    prunes almost everything. Results identical either way."""
-
-    def fill(t):
-        seq = 0
-        for e in range(6):
-            rows = []
-            for c in range(16):
-                seq += 1
-                rows.append(_r("insert", _hexid(c, e), 0, f"t{e}.{c}", e, seq))
-            t.merge(_ev(spark, rows), app_id="x", epoch_id=e)
-
-    plain = LakeTable.create(spark, str(tmp_path / "plain"), TRANSCRIPT_SCHEMA,
-                             n_buckets=2, mode="mor")
-    keyed = LakeTable.create(spark, str(tmp_path / "keyed"), TRANSCRIPT_SCHEMA,
-                             n_buckets=2, mode="mor", keyset_col="conv_id")
-    plain.compact_threshold = keyed.compact_threshold = 10**9
-    fill(plain)
-    fill(keyed)
-    target = _hexid(7, 3)
-    _, p_plain = plain.files_for(where=[("conv_id", "=", target)])
-    _, p_keyed = keyed.files_for(where=[("conv_id", "=", target)])
-    assert p_keyed > p_plain  # membership prunes what intervals cannot
-    assert (_lookup(keyed, target) == _lookup(plain, target)
-            == [(target, 0, "t3.7")])
-
-
-def test_keyset_follows_compaction_and_vacuum(spark, tmp_table_root):
-    t = _table(spark, tmp_table_root)
-    t.compact()
-    t.vacuum(orphan_grace_s=0.0)
-    # compacted files carry fresh keysets; lookups still prune and match
-    kept, pruned = t.files_for(where=[("conv_id", "=", "c1-3")])
-    assert len(kept) >= 1
-    assert _lookup(t, "c1-3") == [("c1-3", 0, "t3.1")]
-    # post-compaction each bucket is one file; the other bucket should prune
-    # unless the key's bit collides (deterministic, so just assert <= total)
-    assert len(kept) <= len(t._state().live_files)
-
-
-def test_keyset_survives_checkpoint(spark, tmp_table_root, monkeypatch):
-    from investigraph_etl_spark.lake import log as log_mod
-
-    monkeypatch.setattr(log_mod, "CHECKPOINT_EVERY", 4)
-    t = _table(spark, tmp_table_root, n_epochs=6)
-    assert t.log._list_checkpoints()  # a checkpoint actually happened
-    st = t._state()
-    assert st.keyset and st.keyset["col"] == "conv_id"
-    kept, pruned = t.files_for(where=[("conv_id", "=", "c0-5")])
-    assert pruned > 0
-    assert _lookup(t, "c0-5") == [("c0-5", 0, "t5.0")]
+    # an absent key still names a bucket: the other bucket's files go
+    assert _assert_key_bucket_only(spark, t, "c1-99") > 0
+    assert _lookup(t, "c1-99") == _full_filter(t, "c1-99") == []
 
 
 def test_non_eq_and_other_col_predicates_ignore_keyset(spark, tmp_table_root):
     t = _table(spark, tmp_table_root)
-    # >= on the key column: membership bitmap must NOT fire (it only proves
-    # equality-membership); result equals full scan
+    # >= on the key column names no single bucket: both buckets are read
+    kept, _ = t.files_for(where=[("conv_id", ">=", "c2")])
+    assert {_bucket_of(f) for f in kept} == {0, 1}
     got = sorted(r.conv_id for r in
                  t.read(where=[("conv_id", ">=", "c2")]).collect())
     want = sorted(r.conv_id for r in
@@ -150,13 +108,11 @@ def test_non_eq_and_other_col_predicates_ignore_keyset(spark, tmp_table_root):
 
 
 def test_numeric_literal_on_string_keyset_column(spark, tmp_path):
-    """Regression: the lookup literal must be cast to the keyset COLUMN's
-    type before hashing — xxhash64 is type-width-sensitive, so an int
-    literal against this string column would otherwise compute a wrong bit
-    and silently prune the files that contain the key."""
-    t = LakeTable.create(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
-                         n_buckets=2, mode="mor", keyset_col="conv_id")
-    t.compact_threshold = 10**9
+    """Regression: the lookup literal must be cast to the key COLUMN's type
+    before hashing — the hash is type-sensitive, so an int literal against
+    this string column would otherwise pick the wrong bucket and silently
+    prune the files that contain the key."""
+    t = _create(spark, str(tmp_path / "t"))
     seq = 0
     for e in range(3):
         rows = []
@@ -164,22 +120,9 @@ def test_numeric_literal_on_string_keyset_column(spark, tmp_path):
             seq += 1
             rows.append(_r("insert", str(7000 + 10 * c + e), 0, f"t{e}.{c}", e, seq))
         t.merge(_ev(spark, rows), app_id="x", epoch_id=e)
+    _assert_key_bucket_only(spark, t, 7012)
     got = sorted((r.conv_id, r.text) for r in
                  t.read(where=[("conv_id", "=", 7012)]).collect())
     want = sorted((r.conv_id, r.text) for r in
                   t.read().filter("conv_id = 7012").collect())
     assert got == want and len(got) == 1  # ("7012", "t2.1") survives pruning
-
-
-def test_keyset_plus_stamp_predicate_compose(spark, tmp_table_root):
-    t = _table(spark, tmp_table_root)
-    cutoff = T0 + pd.Timedelta(hours=3)
-    got = _lookup_where(t, [("conv_id", "=", "c2-4"), ("ts", ">=", cutoff)])
-    assert got == [("c2-4", 0, "t4.2")]
-    miss = _lookup_where(t, [("conv_id", "=", "c0-1"), ("ts", ">=", cutoff)])
-    assert miss == []
-
-
-def _lookup_where(t, preds):
-    return sorted((r.conv_id, r.turn_idx, r.text)
-                  for r in t.read(where=preds).collect())
