@@ -26,29 +26,30 @@ Job budget per epoch (what a 10^10-event deployment pays per micro-batch):
   (action 2).
 - (only if quarantined > 0) one extra write of the quarantine rows.
 
-Crash consistency: the quarantine rows and the ``_metrics`` sidecar are
-written INSIDE the merge's pre-commit hook — after the data write, before the
-commit-log append. Once the (app_id, epoch_id) token is committed a retry is
-skipped, so anything written after the commit would be lost forever on a
-crash between the two; anything written before is made idempotent instead
-(quarantine = per-epoch overwrite directory, metrics = deterministic
-per-epoch filename) so a retry after a crash-before-commit converges.
+Durable record: the epoch's totals and its per-bucket lineage go into the
+metrics of the epoch's own commit, so they are published atomically with the
+``(app_id, epoch_id)`` token — an epoch that never commits shows no lineage,
+and a committed one always does. ``read_metrics`` reads them back from the
+commit log. The quarantine rows are the one sidecar: they are written inside
+the merge's pre-commit hook (after the data write, before the commit-log
+append) to a per-epoch overwrite directory, so a retry after a crash before
+the commit rewrites the same directory instead of duplicating rows, and a
+crash after it cannot lose them.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from investigraph_etl_spark import storage
 from investigraph_etl_spark.cdc.events import canonicalize_events
 from investigraph_etl_spark.cdc.resolve import resolve_lww
 from investigraph_etl_spark.lake.table import LakeTable, _bucket_expr, _physical_key
 
-_METRICS_DIR = "_metrics"
 _QUARANTINE_DIR = "_quarantine"
 
 #: Max n_buckets for which per-bucket lineage rides the write job as an
@@ -56,6 +57,8 @@ _QUARANTINE_DIR = "_quarantine"
 #: node). Wider tables fall back to a separate lineage aggregation action —
 #: plan width, not data volume, is the constraint.
 OBS_LINEAGE_MAX_BUCKETS = 64
+
+_LINEAGE_COLS = ("bucket", "events_applied", "conflicts_resolved", "watermark_pos")
 
 
 def apply_events_batch(
@@ -73,11 +76,12 @@ def apply_events_batch(
     ``n_salts`` switches the resolve to the salted two-phase reduce — the
     manual skew knob (see ``resolve_lww``).
 
-    Returns commit metrics. Per-bucket lineage (events applied, conflicts
-    resolved = events beyond one per key, watermark position = max ts) is
-    appended to the `_metrics` sidecar; malformed events land in
+    Returns the merge's result: the commit version plus the metrics the
+    commit records (see ``_epoch_metrics``), including the per-bucket
+    lineage (events applied, conflicts resolved = events beyond one per key,
+    watermark = max ts, in microseconds since the Unix epoch). Malformed events land in
     `_quarantine` (never abort the epoch — reference swallows per-record
-    errors, /root/reference/investigraph/pipeline.py:89-94).
+    errors, investigraph pipeline.py:89-94).
     """
     st = table._state()
     if (app_id, epoch_id) in st.committed_epochs:
@@ -92,16 +96,44 @@ def apply_events_batch(
     resolved = resolve_lww(valid, n_salts=n_salts, with_count=True)
 
     if st.mode == "mor" and st.n_buckets <= OBS_LINEAGE_MAX_BUCKETS:
-        result = _apply_mor_one_action(
-            table, st, resolved, canon, obs, app_id, epoch_id
-        )
+        apply = _apply_mor_one_action
     else:
-        result = _apply_two_action(
-            table, st, resolved, canon, obs, app_id, epoch_id
-        )
-    if not result.get("skipped"):
-        result["n_salts_used"] = int(n_salts or 0)
-    return result
+        apply = _apply_two_action
+
+    def finish(rows: list[tuple[int, int, int, int]], plan_shape: str) -> dict[str, Any]:
+        """Pre-commit hook tail shared by both paths: land the quarantine
+        rows (rare second job) and build the commit's metrics."""
+        n_quar = int((obs.get or {}).get("n_quar") or 0)
+        if n_quar:
+            _write_quarantine(table, canon, app_id, epoch_id)
+        return _epoch_metrics(rows, n_quar, plan_shape, n_salts)
+
+    return apply(table, st, resolved, app_id, epoch_id, finish)
+
+
+def _epoch_metrics(
+    rows: list[tuple[int, int, int, int]],
+    n_quar: int,
+    plan_shape: str,
+    n_salts: int | None,
+) -> dict[str, Any]:
+    """Per-bucket ``(bucket, events_applied, conflicts_resolved, watermark)``
+    rows → the commit's metrics: epoch totals, the hottest bucket's share of
+    the epoch, the plan facts, and the lineage as columnar lists. Every
+    value is a JSON int/float/str (the watermark is ``unix_micros``)."""
+    rows = sorted(rows)
+    cols = [list(c) for c in zip(*rows)] if rows else [[], [], [], []]
+    applied = cols[1]
+    n_events = sum(applied)
+    return {
+        "events_applied": n_events,
+        "events_quarantined": n_quar,
+        "conflicts_resolved": sum(cols[2]),
+        "max_bucket_share": max(applied) / n_events if n_events else 0.0,
+        "plan_shape": plan_shape,
+        "n_salts_used": int(n_salts or 0),
+        "lineage": dict(zip(_LINEAGE_COLS, cols)),
+    }
 
 
 def _lineage_agg(n_buckets: int):
@@ -114,117 +146,62 @@ def _lineage_agg(n_buckets: int):
     for b in range(n_buckets):
         parts.append(f"sum(CASE WHEN bucket = {b} THEN _cnt END) AS ea_{b}")
         parts.append(f"count(CASE WHEN bucket = {b} THEN 1 END) AS nk_{b}")
-        parts.append(f"max(CASE WHEN bucket = {b} THEN ts END) AS wm_{b}")
+        parts.append(f"unix_micros(max(CASE WHEN bucket = {b} THEN ts END)) AS wm_{b}")
     return F.expr(f"struct({', '.join(parts)})").alias("lin")
 
 
-def _apply_mor_one_action(
-    table, st, resolved, canon, obs, app_id, epoch_id
-) -> dict[str, Any]:
+def _apply_mor_one_action(table, st, resolved, app_id, epoch_id, finish) -> dict[str, Any]:
     """MOR epoch in ONE Spark action (see module docstring): both
     Observations complete with the write; touched buckets come from the
-    written paths; quarantine + metrics + commit metrics all happen in the
-    merge's pre-commit hook so they are durable before the epoch token is."""
+    written paths; the lineage is read off the Observation in the merge's
+    pre-commit hook and lands in the commit."""
     lin = Observation(f"lineage-{epoch_id}")
     bucketed = resolved.withColumn(
         "bucket", _bucket_expr(st.n_buckets, _physical_key(st))
     ).observe(lin, _lineage_agg(st.n_buckets))
-    side: dict[str, Any] = {}
 
     def pre_commit() -> dict[str, Any]:
         vals = lin.get["lin"]
         rows = [
-            (b, int(vals[f"ea_{b}"]), int(vals[f"ea_{b}"]) - int(vals[f"nk_{b}"]), vals[f"wm_{b}"])
+            (b, vals[f"ea_{b}"], vals[f"ea_{b}"] - vals[f"nk_{b}"], vals[f"wm_{b}"])
             for b in range(st.n_buckets)
             if vals[f"nk_{b}"]
         ]
-        per_bucket = pd.DataFrame(
-            rows, columns=["bucket", "events_applied", "conflicts_resolved", "watermark_pos"]
-        )
-        n_quar = int((obs.get or {}).get("n_quar") or 0)
-        if n_quar:  # rare second job: recompute the canonical rows' reject side
-            _write_quarantine(table, canon, app_id, epoch_id)
-        _write_metrics(table, epoch_id, per_bucket, n_quar)
-        n_events = int(per_bucket["events_applied"].sum()) if len(per_bucket) else 0
-        n_keys = sum(int(vals[f"nk_{b}"] or 0) for b in range(st.n_buckets))
-        share = (
-            float(per_bucket["events_applied"].max() / n_events)
-            if n_events else 0.0
-        )
-        side.update({
-            "events_applied": n_events,
-            "events_quarantined": n_quar,
-            "max_bucket_share": share,
-        })
-        return {
-            "events_applied": n_events,
-            "events_quarantined": n_quar,
-            "conflicts_resolved": n_events - n_keys,
-        }
+        return finish(rows, "combine")
 
-    result = table.merge(
+    return table.merge(
         bucketed.drop("_cnt", "bucket"),
         app_id=app_id,
         epoch_id=epoch_id,
         extra_metrics=pre_commit,
     )
-    if not result.get("skipped"):
-        result.update(side)
-        result["plan_shape"] = "combine"
-    return result
 
 
-def _apply_two_action(
-    table, st, resolved, canon, obs, app_id, epoch_id
-) -> dict[str, Any]:
+def _apply_two_action(table, st, resolved, app_id, epoch_id, finish) -> dict[str, Any]:
     """COW (touched set must precede the write) and wide-bucket MOR: cache
     the resolve, run the small per-bucket lineage aggregation, then MERGE."""
     resolved = resolved.cache()
     try:
-        per_bucket = (
-            resolved.withColumn("bucket", _bucket_expr(st.n_buckets, _physical_key(st)))
+        rows = [
+            tuple(r)
+            for r in resolved.withColumn(
+                "bucket", _bucket_expr(st.n_buckets, _physical_key(st))
+            )
             .groupBy("bucket")
             .agg(
-                F.sum("_cnt").alias("events_applied"),
-                (F.sum("_cnt") - F.count(F.lit(1))).alias("conflicts_resolved"),
-                F.max("ts").alias("watermark_pos"),
+                F.sum("_cnt"),
+                F.sum("_cnt") - F.count(F.lit(1)),
+                F.expr("unix_micros(max(ts))"),
             )
-            .toPandas()
-        )
-        n_events = int(per_bucket["events_applied"].sum()) if len(per_bucket) else 0
-        touched = [int(b) for b in per_bucket["bucket"]]
-        n_quar = int((obs.get or {}).get("n_quar") or 0)
-
-        def pre_commit() -> dict[str, Any]:
-            if n_quar:
-                _write_quarantine(table, canon, app_id, epoch_id)
-            _write_metrics(table, epoch_id, per_bucket, n_quar)
-            return {
-                "events_applied": n_events,
-                "events_quarantined": n_quar,
-                "conflicts_resolved": int(per_bucket["conflicts_resolved"].sum())
-                if len(per_bucket)
-                else 0,
-            }
-
-        result = table.merge(
+            .collect()
+        ]
+        return table.merge(
             resolved.drop("_cnt"),
             app_id=app_id,
             epoch_id=epoch_id,
-            touched=touched,
-            extra_metrics=pre_commit,
+            touched=[r[0] for r in rows],
+            extra_metrics=lambda: finish(rows, "two_action"),
         )
-        share = (
-            float(per_bucket["events_applied"].max() / n_events)
-            if n_events else 0.0
-        )
-        result.update({
-            "events_applied": n_events,
-            "events_quarantined": n_quar,
-            "max_bucket_share": share,
-            "plan_shape": "two_action",
-        })
-        return result
     finally:
         resolved.unpersist()
 
@@ -246,34 +223,35 @@ def read_quarantine(table: LakeTable) -> DataFrame:
     return table.spark.read.option("recursiveFileLookup", "true").parquet(path)
 
 
-def _write_metrics(
-    table: LakeTable, epoch_id: int, per_bucket: pd.DataFrame, n_quar: int
-) -> None:
-    out = per_bucket.copy()
-    if len(out) == 0:
-        out = pd.DataFrame(
-            {"bucket": pd.array([], dtype="int32"),
-             "events_applied": pd.array([], dtype="int64"),
-             "conflicts_resolved": pd.array([], dtype="int64"),
-             "watermark_pos": pd.array([], dtype="datetime64[us]")}
-        )
-    if n_quar:
-        quar_row = pd.DataFrame(
-            {"bucket": [-1], "events_applied": [0], "conflicts_resolved": [0],
-             "watermark_pos": [pd.NaT]}
-        )
-        out = pd.concat([out, quar_row], ignore_index=True)
-    out.insert(0, "epoch_id", epoch_id)
-    # the quarantine count rides the sentinel bucket=-1 row appended above
-    # (scalar 0 broadcasts to every row when nothing was quarantined)
-    out["events_quarantined"] = ([0] * (len(out) - 1) + [n_quar]) if n_quar else 0
-    # Spark's parquet reader rejects TIMESTAMP(NANOS); pin to micros.
-    out["watermark_pos"] = out["watermark_pos"].astype("datetime64[us]")
-    table.fs.put_parquet(
-        storage.join(table.root, _METRICS_DIR, f"epoch-{epoch_id:010d}.parquet"), out
-    )
+_METRICS_SCHEMA = T.StructType([
+    T.StructField("app_id", T.StringType()),
+    T.StructField("version", T.LongType()),
+    T.StructField("epoch_id", T.LongType()),
+    T.StructField("bucket", T.IntegerType()),
+    T.StructField("events_applied", T.LongType()),
+    T.StructField("conflicts_resolved", T.LongType()),
+    T.StructField("watermark_pos", T.LongType()),
+    T.StructField("events_quarantined", T.LongType()),
+])
 
 
 def read_metrics(table: LakeTable) -> DataFrame:
-    """The `_metrics` sidecar as a DataFrame (per epoch × bucket lineage)."""
-    return table.spark.read.parquet(storage.join(table.root, _METRICS_DIR))
+    """Per epoch × bucket lineage, read from the commit log: one row per
+    bucket an epoch touched, plus a ``bucket = -1`` row carrying the epoch's
+    quarantine count when it is non-zero. ``app_id`` and ``version`` name
+    the commit, so two writers' epoch 0 stay apart. Only committed epochs
+    appear. Commits written before lineage moved into the commit carry none
+    and yield no rows; an old ``_metrics/`` parquet directory is left on
+    disk and not read."""
+    rows = []
+    for c in table.log.walk():
+        lineage = c.metrics.get("lineage")
+        if lineage is None:
+            continue
+        head = (c.app_id, c.version, c.epoch_id)
+        rows += [(*head, *r, 0) for r in zip(*(lineage[k] for k in _LINEAGE_COLS))]
+        if c.metrics["events_quarantined"]:
+            rows.append((*head, -1, 0, 0, None, c.metrics["events_quarantined"]))
+    return table.spark.createDataFrame(rows, _METRICS_SCHEMA).withColumn(
+        "watermark_pos", F.timestamp_micros("watermark_pos")
+    )

@@ -21,6 +21,7 @@ the next version, data files untouched.
 from __future__ import annotations
 
 import time
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -82,7 +83,6 @@ class TableState:
     n_buckets: int
     key_cols: list[str]
     committed_epochs: set[tuple[str | None, int]]  # (app_id, epoch_id)
-    commits: list[Commit]          # commits replayed after the checkpoint
     mode: str = "cow"              # "cow" | "mor"
     file_stats: dict[str, Any] = field(default_factory=dict)  # zone maps
     stats_cols: list[str] = field(default_factory=list)
@@ -144,7 +144,6 @@ class CommitLog:
         key_cols: list[str] = []
         mode = "cow"
         epochs: set[tuple[str | None, int]] = set()
-        commits: list[Commit] = []
         file_stats: dict[str, Any] = {}
         stats_cols: list[str] = []
         bucket_fn: str | None = None
@@ -187,7 +186,6 @@ class CommitLog:
                 mode = c["mode"]
             if c.get("epoch_id") is not None:
                 epochs.add((c.get("app_id"), c["epoch_id"]))
-            commits.append(Commit(**{k: c.get(k) for k in Commit.__dataclass_fields__}))
 
         return TableState(
             version=versions[-1],
@@ -196,7 +194,6 @@ class CommitLog:
             n_buckets=n_buckets,
             key_cols=key_cols,
             committed_epochs=epochs,
-            commits=commits,
             mode=mode,
             file_stats=file_stats,
             stats_cols=stats_cols,
@@ -217,12 +214,22 @@ class CommitLog:
         return float(c.get("committed_at") or 0.0)
 
     def get(self, version: int) -> Commit:
-        """One commit by version (changelog reads walk these)."""
+        """One commit by version."""
         c = self.fs.get_json(self._version_path(version))
         kw = {k: c.get(k) for k in Commit.__dataclass_fields__}
         for k, empty in (("added", []), ("removed", []), ("metrics", {}), ("stats", {})):
             kw[k] = kw[k] or empty
         return Commit(**kw)
+
+    def walk(self, since: int = 0, to: int | None = None) -> Iterator[Commit]:
+        """Every committed version in ``(since, to]``, ascending: one LIST
+        of the log prefix, then one GET per commit in the window. Unlike
+        ``read_state`` it does not start from a checkpoint, so it sees the
+        whole log — history, cumulative totals, lineage and changelog reads
+        all walk it."""
+        for v in self._list_versions():
+            if since < v and (to is None or v <= to):
+                yield self.get(v)
 
     # ---- write ----------------------------------------------------------
     def commit(self, commit: Commit) -> None:
@@ -249,10 +256,8 @@ class CommitLog:
         were vacuumed (a clear error beats a mid-scan failure)."""
         out: list[tuple[str, int]] = []
         seen_tokens: set[str] = set()
-        for v in self.versions():
-            if not (since < v <= to):
-                continue
-            c = self.get(v)
+        for c in self.walk(since, to):
+            v = c.version
             if c.metrics.get("compaction") or c.metrics.get("vacuum"):
                 continue
             if v == 1 or not c.added:

@@ -642,10 +642,6 @@ class LakeTable:
                 visible.append(T.StructField(name, dtype, True))
         return T.StructType(visible + hidden)
 
-    #: Soft per-file row target (the ~128 MB file-size knob): tasks roll to a
-    #: new file past this many rows. None = one file per bucket per commit.
-    max_records_per_file: int | None = None
-
     def _write_data(
         self,
         df: DataFrame,
@@ -664,9 +660,7 @@ class LakeTable:
         token directory that ``vacuum`` reclaims.
 
         The frame is hash-repartitioned on the bucket column so each bucket
-        lands in one task → O(touched buckets) files per commit;
-        ``max_records_per_file`` rolls oversized task outputs into multiple
-        ~target-size files.
+        lands in one task → O(touched buckets) files per commit.
         """
         token = uuid.uuid4().hex[:12]
         dest = join(self.data_dir, f"{_COMMIT_COL}={token}")
@@ -691,11 +685,8 @@ class LakeTable:
             # and runs of a conversation compress together. Paid only where
             # requested (compaction, the background op).
             out = out.sortWithinPartitions(*cluster_by)
-        writer = out.write.mode("overwrite")
-        if self.max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", self.max_records_per_file)
         with phase("write_job"):
-            writer.partitionBy(_BUCKET_COL).parquet(dest)
+            out.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(dest)
 
         # ONE recursive LIST of the fresh token's prefix builds the manifest
         # (control-plane storage interface — object-store LIST, POSIX walk).
@@ -1256,9 +1247,8 @@ class LakeTable:
         return removed
 
     def history(self) -> list[dict]:
-        """Commit lineage (the `_commits` sidecar view)."""
-        st = self._state()
-        return [c.to_json() for c in st.commits]
+        """Every commit of the table, oldest first (the `_commits` view)."""
+        return [c.to_json() for c in self.log.walk()]
 
     def export_metadata(self) -> dict[str, Any]:
         """Write ``index.json`` at the table root: schema + layout + stats.
@@ -1267,13 +1257,13 @@ class LakeTable:
         (/root/reference/investigraph/model/context.py:59-63,
         /root/reference/investigraph/pipeline.py:177-187). Stats come from the
         commit log (no table scan): live files, committed epochs, cumulative
-        events applied/quarantined/conflicts from commit metrics.
+        events applied/quarantined/conflicts summed over every commit's metrics.
         """
         st = self._state()
         totals: dict[str, int] = {}
-        for c in st.commits:
+        for c in self.log.walk(to=st.version):
             for k in ("events_applied", "events_quarantined", "conflicts_resolved"):
-                if k in (c.metrics or {}):
+                if k in c.metrics:
                     totals[k] = totals.get(k, 0) + int(c.metrics[k])
         meta = {
             "name": self.root.rstrip("/").rsplit("/", 1)[-1],

@@ -4,7 +4,7 @@ vacuum, sidecars).
 The DATA plane (parquet scans and writes) already goes through Spark's Hadoop
 FS connectors and therefore speaks any scheme the cluster has jars for. The
 CONTROL plane — commit-log files, manifest listing after a write, vacuum,
-`_metrics`/`index.json` sidecars — used to be hardwired to POSIX calls
+the `index.json` sidecar — used to be hardwired to POSIX calls
 (``os.listdir``/``os.walk``/``open``), which meant the object-store-safe
 commit *layout* (direct-to-final, zero renames) still could not actually run
 against ``s3://``. Everything control-plane now routes through the tiny
@@ -122,12 +122,6 @@ class Storage:
 
     def put_json(self, path: str, obj: Any, exclusive: bool = False) -> None:
         self.put_text(path, json.dumps(obj), exclusive=exclusive)
-
-    def put_parquet(self, path: str, pdf) -> None:
-        """One pandas frame as one parquet object (sidecar writes)."""
-        buf = io.BytesIO()
-        pdf.to_parquet(buf, index=False)
-        self.put_bytes(path, buf.getvalue())
 
     def prune(self, prefix: str) -> None:
         """Reclaim empty directories under prefix. No-op where directories

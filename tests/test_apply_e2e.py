@@ -16,12 +16,15 @@ from investigraph_etl_spark.lake.table import LakeTable
 PAYLOAD = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
-def _apply_all(spark, root, ev, n_salts=None):
-    table = LakeTable.create(spark, root, TRANSCRIPT_SCHEMA, n_buckets=8)
+def _apply_all(spark, root, ev, n_salts=None, n_buckets=8, mode="cow"):
+    table = LakeTable.create(spark, root, TRANSCRIPT_SCHEMA, n_buckets=n_buckets, mode=mode)
+    results = []
     for epoch, part in ev.groupby("epoch", sort=True):
         batch = spark.createDataFrame(part.drop(columns=["epoch"]))
-        apply_events_batch(table, batch, app_id="e2e", epoch_id=int(epoch), n_salts=n_salts)
-    return table
+        results.append(apply_events_batch(
+            table, batch, app_id="e2e", epoch_id=int(epoch), n_salts=n_salts
+        ))
+    return table, results
 
 
 def _final(table):
@@ -33,15 +36,31 @@ def _final(table):
     )
 
 
-@pytest.mark.parametrize("n_salts", [None, 8])
-def test_e2e_matches_oracle(spark, tmp_path, n_salts):
+@pytest.mark.parametrize(
+    "n_salts,wide_mor", [(None, False), (8, False), (None, True)],
+    ids=["None", "8", "wide_mor"],
+)
+def test_e2e_matches_oracle(spark, tmp_path, n_salts, wide_mor):
+    """``wide_mor``: a MOR table wider than ``OBS_LINEAGE_MAX_BUCKETS`` takes
+    the two-action fallback, and its committed lineage must still add up."""
     ev = generate_events(GeneratorConfig(n_events=6000, seed=42, n_epochs=5))
-    table = _apply_all(spark, str(tmp_path / "t"), ev, n_salts=n_salts)
+    layout = dict(n_buckets=72, mode="mor") if wide_mor else {}
+    table, results = _apply_all(spark, str(tmp_path / "t"), ev, n_salts=n_salts, **layout)
     got = _final(table)
     want = replay_oracle(ev.drop(columns=["epoch"]))[PAYLOAD].reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
     # 100% per-turn text equality, explicitly (BASELINE.json correctness gate)
     assert (got["text"].fillna("∅") == want["text"].fillna("∅")).all()
+    if wide_mor:
+        assert all(r["plan_shape"] == "two_action" for r in results)
+        commits = [c for c in table.history() if c["epoch_id"] is not None]
+        assert [c["version"] for c in commits] == [r["version"] for r in results]
+        for c in commits:
+            m = c["metrics"]
+            assert sum(m["lineage"]["events_applied"]) == m["events_applied"] > 0
+        assert read_metrics(table).toPandas()["events_applied"].sum() == sum(
+            r["events_applied"] for r in results
+        )
 
 
 def test_e2e_epoch_partitioning_invariance(spark, tmp_path):
@@ -50,8 +69,8 @@ def test_e2e_epoch_partitioning_invariance(spark, tmp_path):
     ev_a = generate_events(base)
     ev_b = ev_a.copy()
     ev_b["epoch"] = (pd.RangeIndex(len(ev_b)) * 9 // len(ev_b)).astype("int64")
-    ta = _apply_all(spark, str(tmp_path / "a"), ev_a)
-    tb = _apply_all(spark, str(tmp_path / "b"), ev_b)
+    ta, _ = _apply_all(spark, str(tmp_path / "a"), ev_a)
+    tb, _ = _apply_all(spark, str(tmp_path / "b"), ev_b)
     pd.testing.assert_frame_equal(_final(ta), _final(tb))
 
 
@@ -83,8 +102,9 @@ def test_crash_between_write_and_commit_keeps_quarantine(spark, tmp_path):
     """Regression (round-2 advice): quarantine + metrics used to be written
     AFTER the commit-log append — a crash between the two permanently lost
     the quarantined rows, since the committed epoch token makes the retry a
-    no-op. Both now happen in the pre-commit hook; a crash injected at the
-    log commit must leave the retry able to converge with no loss and no
+    no-op. Quarantine is now written in the pre-commit hook and the lineage
+    rides the commit itself; a crash injected at the log commit must leave
+    no lineage behind and the retry able to converge with no loss and no
     quarantine duplicates."""
     from investigraph_etl_spark.cdc.apply import read_quarantine
 
@@ -99,7 +119,7 @@ def test_crash_between_write_and_commit_keeps_quarantine(spark, tmp_path):
     boom = {"armed": True}
 
     def crashing_commit(c):
-        if boom["armed"]:  # data + quarantine + metrics written, token not yet
+        if boom["armed"]:  # data + quarantine written, token + lineage not yet
             boom["armed"] = False
             raise RuntimeError("injected crash before log commit")
         return real_commit(c)
@@ -107,8 +127,10 @@ def test_crash_between_write_and_commit_keeps_quarantine(spark, tmp_path):
     table.log.commit = crashing_commit
     with pytest.raises(RuntimeError, match="injected crash"):
         apply_events_batch(table, batch, app_id="cr", epoch_id=0)
-    # the crash lost the token but NOT the quarantine rows
+    # the crash lost the token but NOT the quarantine rows; the lineage
+    # rides the commit, so the uncommitted epoch shows none
     assert read_quarantine(table).count() == 15
+    assert read_metrics(table).count() == 0
 
     res = apply_events_batch(table, batch, app_id="cr", epoch_id=0)  # retry
     assert res["events_quarantined"] == 15
@@ -121,6 +143,29 @@ def test_crash_between_write_and_commit_keeps_quarantine(spark, tmp_path):
 
     res2 = apply_events_batch(table, batch, app_id="cr", epoch_id=0)  # re-delivery
     assert res2.get("skipped")
+
+
+def test_metrics_keep_two_apps_epoch_zero_apart(spark, tmp_path):
+    """Two writers (apps ``a`` and ``b``) each commit epoch 0 to one MOR
+    table: the lineage of both epochs survives, one row set per app, each
+    tagged with its own commit version."""
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, n_buckets=8, mode="mor"
+    )
+    res = {}
+    for app, seed in (("a", 21), ("b", 22)):
+        ev = generate_events(GeneratorConfig(n_events=300, seed=seed, n_epochs=1))
+        batch = spark.createDataFrame(ev.drop(columns=["epoch"]))
+        res[app] = apply_events_batch(table, batch, app_id=app, epoch_id=0)
+    m = read_metrics(table).toPandas()
+    assert m["events_applied"].sum() == sum(r["events_applied"] for r in res.values())
+    assert set(m["app_id"]) == {"a", "b"}
+    for app, r in res.items():
+        rows = m[m["app_id"] == app]
+        assert set(rows["version"]) == {r["version"]}
+        assert set(rows["epoch_id"]) == {0}
+        assert rows["bucket"].is_unique
+        assert rows["events_applied"].sum() == r["events_applied"] > 0
 
 
 def test_e2e_schema_evolution_mid_stream(spark, tmp_path):

@@ -217,6 +217,22 @@ def test_history_lineage(spark, tmp_table_root):
     assert h[-1]["metrics"]["events_applied"] == len(ev)
 
 
+def test_history_and_export_span_checkpoints(tmp_table_root):
+    """history() and export_metadata() cover every commit, not just the ones
+    after the last checkpoint (needs no Spark session: both read only the
+    commit log)."""
+    from investigraph_etl_spark.lake.log import CHECKPOINT_EVERY, Commit
+
+    t = LakeTable.create(None, tmp_table_root, TRANSCRIPT_SCHEMA, n_buckets=4)
+    n = CHECKPOINT_EVERY + 5
+    for v in range(2, n + 1):
+        t.log.commit(Commit(version=v, app_id="a", epoch_id=v,
+                            metrics={"events_applied": 10}))
+    h = t.history()
+    assert [c["version"] for c in h] == list(range(1, n + 1))
+    assert t.export_metadata()["stats"] == {"events_applied": 10 * (n - 1)}
+
+
 def test_decimal_stats_col_commits_and_skips_bounds(spark, tmp_table_root):
     """ADVICE r3: pyarrow emits decimal.Decimal min/max for DECIMAL stats
     columns; json.dumps raised TypeError AFTER the data files landed, aborting
