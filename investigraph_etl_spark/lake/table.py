@@ -16,7 +16,9 @@ Key design decisions, each driven by 100 TB scale:
   ``read(where=[("conv_id", "=", k)])`` keeps only the files of bucket
   ``pmod(murmur3(k), n_buckets)`` (the ``n_buckets`` of the version read) —
   a point lookup scans ~1/n_buckets of the table, MOR-safe for the same
-  reason key zone maps are.
+  reason key zone maps are. A MOR read pruned to one bucket LWW-reduces in
+  ONE task (no exchange): a bucket is what one write or compaction task
+  already holds, so the lookup's task is sized like a write task.
 - **LWW state lives in the table** as hidden columns ``_ts``/``_seq``/
   ``_deleted``: cross-epoch conflicts (late update after delete, duplicate
   epochs) resolve by comparing stamps, so the MERGE is a pure idempotent
@@ -311,9 +313,9 @@ class LakeTable:
         return self._state().committed_epochs
 
     # ------------------------------------------------------------------ read
-    def _read_files(
-        self, files: list[str], schema: T.StructType, with_bucket: bool = False
-    ) -> DataFrame:
+    def _scan(self, files: list[str], schema: T.StructType) -> DataFrame:
+        """Physical rows of ``files`` plus the ``commit``/``bucket``
+        partition columns (the directory layout)."""
         reader_schema = T.StructType(
             list(schema.fields)
             + [
@@ -322,19 +324,19 @@ class LakeTable:
             ]
         )
         if not files:
-            df = self.spark.createDataFrame([], reader_schema)
-        else:
-            paths = [join(self.data_dir, f) for f in files]
-            # Explicit schema: files written before a column existed read as null
-            # (additive evolution); basePath materializes the commit/bucket
-            # partition columns from the directory layout.
-            df = (
-                self.spark.read.schema(reader_schema)
-                .option("basePath", self.data_dir)
-                .parquet(*paths)
-            )
-        df = df.drop(_COMMIT_COL)
-        return df if with_bucket else df.drop(_BUCKET_COL)
+            return self.spark.createDataFrame([], reader_schema)
+        # Explicit schema: files written before a column existed read as null
+        # (additive evolution); basePath materializes the commit/bucket
+        # partition columns from the directory layout.
+        return (
+            self.spark.read.schema(reader_schema)
+            .option("basePath", self.data_dir)
+            .parquet(*[join(self.data_dir, f) for f in files])
+        )
+
+    def _read_files(self, files: list[str], schema: T.StructType) -> DataFrame:
+        """Physical rows of ``files``, without the partition columns."""
+        return self._scan(files, schema).drop(_COMMIT_COL, _BUCKET_COL)
 
     def _collect_stats(self, added: list[str], st) -> dict:
         """Zone maps for freshly written files: one parquet-footer read per
@@ -414,15 +416,12 @@ class LakeTable:
         """LWW-reduce physical rows to one winner per key by (_ts, _seq).
 
         The merge-on-read kernel: same max_by partial-agg shape as
-        cdc/resolve.py, over the stored stamp columns.
+        cdc/resolve.py, over the stored stamp columns. Built from SQL
+        strings: a handful of driver calls whatever the column count.
         """
-        rest = [f.name for f in physical.fields if f.name not in KEY_COLS]
-        cand = F.struct(*[F.col(c) for c in rest])
-        stamp = F.struct(F.col("_ts"), F.col("_seq"))
-        reduced = df.groupBy(*KEY_COLS).agg(F.max_by(cand, stamp).alias("w"))
-        return reduced.select(
-            *KEY_COLS, *[F.col(f"w.{c}").alias(c) for c in rest]
-        )
+        rest = ", ".join(f"`{f.name}`" for f in physical.fields if f.name not in KEY_COLS)
+        winner = F.expr(f"max_by(struct({rest}), struct(_ts, _seq)) as w")
+        return df.groupBy(*KEY_COLS).agg(winner).selectExpr(*KEY_COLS, "w.*")
 
     def read(
         self,
@@ -446,23 +445,35 @@ class LakeTable:
         I/O. On MOR tables only key-column predicates prune files (a payload
         bound could drop the LWW winner while keeping a stale loser);
         payload predicates still filter, post-reduction.
+
+        A MOR read whose files all sit in one bucket, or that pruning left
+        with no file (a ``conv_id = k`` lookup on a table of ``n_buckets >
+        1``), reduces in a single task: one Spark job of one stage, no
+        exchange. That task holds one bucket — the same unit a write or
+        compaction task holds — so it is sized like a write task, never like
+        the table. Every other MOR read keeps the keyed exchange and spreads
+        the reduce over the cluster.
         """
         st = self._state(at_version)
         schema = T.StructType.fromJson(st.schema)
         files = st.live_files
-        cond = None
+        cond = F.expr("not _deleted")
         if where:
             preds = validate_preds(where)
             files, pruned = self._pruned_files(st, preds)
-            cond = preds_to_column(preds)
+            cond = cond & preds_to_column(preds)
             if prune_report is not None:  # observability without re-pruning
                 prune_report.update(files_scanned=len(files), files_pruned=pruned)
         df = self._read_files(files, schema)
         if st.mode == "mor":
+            if st.n_buckets > 1 and len({_bucket_of(f) for f in files}) <= 1:
+                # One partition already meets the aggregate's distribution,
+                # so Spark plans no exchange (and no extra adaptive job); the
+                # filter still pushes to the scan below the Coalesce.
+                df = df.coalesce(1)
             df = self._reduce_physical(df, schema)
         public = [f.name for f in schema.fields if f.name not in HIDDEN_COLS]
-        out = df.filter(~F.col("_deleted")).select(*public)
-        return out.filter(cond) if cond is not None else out
+        return df.filter(cond).select(*public)
 
     def changes(
         self,
@@ -497,7 +508,11 @@ class LakeTable:
         vacuumed — ``vacuum(retain_versions=...)`` is the changelog-retention
         knob, exactly as in Iceberg.
         """
-        st = self._state(to_version)
+        return self._changes(self._state(to_version), since_version, with_stamps)
+
+    def _changes(self, st, since_version: int, with_stamps: bool) -> DataFrame:
+        """:meth:`changes` up to the version of the already-read state
+        ``st`` (so a caller that has the state reads the log once)."""
         to_v = st.version
         if since_version > to_v:
             raise ValueError(f"since_version {since_version} > version {to_v}")
@@ -507,49 +522,19 @@ class LakeTable:
         pairs = self.log.change_window_files(
             self.fs, self.data_dir, since_version, to_v, st.mode
         )
-        files = [f for f, _v in pairs]
-        # dir name "commit=<token>"; the materialized partition column
-        # holds the bare token
-        token_version = {
-            f.split("/", 1)[0].split("=", 1)[1]: v for f, v in pairs
-        }
-
-        reader_schema = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField(_COMMIT_COL, T.StringType(), True),
-                T.StructField(_BUCKET_COL, T.IntegerType(), True),
-            ]
-        )
+        # dir name "commit=<token>" (a hex write token); the materialized
+        # partition column holds the bare token. The token→version map is
+        # one SQL map literal: one parse, whatever the window's length.
+        token_version = {f.split("/", 1)[0].split("=", 1)[1]: v for f, v in pairs}
+        entries = ", ".join(f"'{t}', {v}" for t, v in token_version.items())
+        version = f"element_at(map({entries}), {_COMMIT_COL})" if entries else "null"
+        public = [f"`{f.name}`" for f in schema.fields if f.name not in HIDDEN_COLS]
         stamp_cols = ["_ts", "_seq"] if with_stamps else []
-        if not token_version:
-            empty = self.spark.createDataFrame([], reader_schema)
-            public = [f.name for f in schema.fields if f.name not in HIDDEN_COLS]
-            return empty.select(
-                *public,
-                *stamp_cols,
-                F.lit("upsert").alias("_change_type"),
-                F.lit(0).cast("long").alias("_commit_version"),
-            ).limit(0)
-
-        df = (
-            self.spark.read.schema(reader_schema)
-            .option("basePath", self.data_dir)
-            .parquet(*[join(self.data_dir, f) for f in files])
-        )
-        ver_map = F.create_map(
-            *[x for t, v in token_version.items() for x in (F.lit(t), F.lit(v))]
-        )
-        public = [f.name for f in schema.fields if f.name not in HIDDEN_COLS]
-        return df.select(
+        return self._scan([f for f, _v in pairs], schema).selectExpr(
             *public,
             *stamp_cols,
-            F.when(F.col("_deleted"), F.lit("delete"))
-            .otherwise(F.lit("upsert"))
-            .alias("_change_type"),
-            F.element_at(ver_map, F.col(_COMMIT_COL))
-            .cast("long")
-            .alias("_commit_version"),
+            "if(_deleted, 'delete', 'upsert') as _change_type",
+            f"cast({version} as long) as _commit_version",
         )
 
     def consume_changes(self, consumer_id: str, with_stamps: bool = False):
@@ -570,8 +555,9 @@ class LakeTable:
         last = 0
         if self.fs.exists(path):
             last = int(self.fs.get_json(path)["version"])
-        cur = self.version
-        df = self.changes(last, cur, with_stamps=with_stamps)
+        st = self._state()
+        cur = st.version
+        df = self._changes(st, last, with_stamps)
 
         def ack() -> int:
             self.fs.put_json(path, {"version": cur, "consumer": consumer_id})
@@ -883,8 +869,11 @@ class LakeTable:
             metrics=metrics,
             stats=stats,
         )
+        base = st  # the state the published commit sits on
 
         def revalidate(new_st) -> Commit:
+            nonlocal base
+            base = new_st
             if epoch_id is not None and (app_id, epoch_id) in new_st.committed_epochs:
                 raise _EpochRace
             if new_st.n_buckets != st.n_buckets:
@@ -902,13 +891,13 @@ class LakeTable:
             # Re-merge the schema additively on top of whatever the winning
             # writers committed (parquet is read by name, so files written
             # under the pre-race column order stay valid).
-            base = T.StructType.fromJson(new_st.schema)
+            schema = T.StructType.fromJson(new_st.schema)
             try:
-                widened = self._evolve_schema(base, payload_types)
+                widened = self._evolve_schema(schema, payload_types)
             except TypeError:
                 self._discard_files(commit.added)
                 raise
-            commit.schema = widened.jsonValue() if widened != base else None
+            commit.schema = widened.jsonValue() if widened != schema else None
             return commit
 
         try:
@@ -926,7 +915,8 @@ class LakeTable:
             return "redo", extra_metrics
         if st.mode == "mor":
             with phase("compact_check"):
-                self._maybe_compact(touched)
+                # the published version's files, without a state re-read
+                self._maybe_compact(touched, base.live_files + commit.added)
         return "done", {"skipped": False, "version": version, **metrics}
 
     def _events_to_physical(
@@ -965,8 +955,11 @@ class LakeTable:
                 counts[b] = counts.get(b, 0) + 1
         return counts
 
-    def _maybe_compact(self, candidate_buckets: list[int]) -> None:
-        counts = self._files_per_bucket(self._state().live_files)
+    def _maybe_compact(self, candidate_buckets: list[int], live_files: list[str]) -> None:
+        """Compact the candidates holding more than ``compact_threshold``
+        of ``live_files``. A list that misses a concurrent commit only moves
+        compaction by an epoch: ``compact()`` reads the state itself."""
+        counts = self._files_per_bucket(live_files)
         need = [b for b in candidate_buckets if counts.get(b, 0) > self.compact_threshold]
         if need:
             self.compact(buckets=need)

@@ -364,3 +364,40 @@ def test_explicit_listing_parallelism_is_respected(spark, tmp_table_root):
     assert spark.conf.get(LISTING_PARALLELISM) == str(
         2 * spark.sparkContext.defaultParallelism
     )
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_mor_lookup_reduces_in_one_task_without_exchange(spark, tmp_table_root):
+    """A MOR ``conv_id = k`` read holds one bucket: it reduces in one task
+    (one job, one stage), with no exchange, and equals the filtered full
+    read — for a key with several generations, a tombstoned key, an absent
+    key whose bucket is scanned, and one the zone maps prune to no file."""
+    t = _fill(spark, tmp_table_root, mode="mor")  # 4 generations per key
+    t.merge(_ev(spark, [_r("delete", "c7", 0, None, 9, 999)]), app_id="x", epoch_id=9)
+    for conv, n_files in (("c5", 4), ("c7", 5), ("c55", 4), ("nope", 0)):
+        assert len(t.files_for(where=[("conv_id", "=", conv)])[0]) == n_files
+        df = t.read(where=[("conv_id", "=", conv)])
+        assert "Exchange" not in _plan(df)
+        got: list = []
+        assert _stage_tasks(spark, f"one-task-{conv}", lambda: got.extend(_rows(df))) == [1]
+        assert got == _rows(t.read().filter(f"conv_id = '{conv}'"))
+        assert len(got) == (conv == "c5")
+    assert "Coalesce 1" in _plan(t.read(where=[("conv_id", "=", "c5")]))
+
+
+def test_reads_beyond_one_bucket_keep_the_exchange(spark, tmp_path):
+    """A full read, a key range and a lookup on a one-bucket table (the
+    whole table) still reduce over a keyed exchange."""
+    t = _fill(spark, str(tmp_path / "t"), mode="mor")
+    one = _fill(spark, str(tmp_path / "one"), mode="mor", n_buckets=1)
+    for group, df in (
+        ("full", t.read()),
+        ("range", t.read(where=[("turn_idx", ">=", 0)])),
+        ("one-bucket-table", one.read(where=[("conv_id", "=", "c5")])),
+    ):
+        assert "Exchange hashpartitioning" in _plan(df), group
+        assert len(_stage_tasks(spark, f"exchange-{group}", df.collect)) > 1, group
+    assert _rows(one.read(where=[("conv_id", "=", "c5")])) == [("c5", 0, "t3.5")]

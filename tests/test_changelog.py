@@ -139,6 +139,28 @@ def test_consume_changes_consumer_groups(spark, tmp_table_root):
         a()
 
 
+def test_consume_changes_reads_state_once(spark, tmp_table_root, monkeypatch):
+    """One state read cuts the window and plans its changelog; the window
+    and the ack cursor are the same as ``changes(last, version)``."""
+    from investigraph_etl_spark.lake.log import CommitLog
+
+    t, v1 = _mor(spark, tmp_table_root)
+    calls = []
+    read_state = CommitLog.read_state
+    monkeypatch.setattr(
+        CommitLog, "read_state",
+        lambda self, *a, **k: calls.append(1) or read_state(self, *a, **k),
+    )
+    df, ack = t.consume_changes("once")
+    assert len(calls) == 1
+    assert ack.window == (0, t.version)
+    assert sorted(df.collect(), key=str) == sorted(t.changes(0, t.version).collect(), key=str)
+    assert ack() == t.version
+    calls.clear()
+    df, ack = t.consume_changes("once")
+    assert len(calls) == 1 and df.count() == 0 and ack.window == (t.version,) * 2
+
+
 def test_compact_clusters_rows_by_key(spark, tmp_table_root):
     """Clustered compaction writes each file key-sorted (tight per-row-group
     ranges; conversations contiguous)."""

@@ -163,3 +163,37 @@ def test_mor_schema_evolution_mid_stream(spark, tmp_path):
     got_idx = got.set_index(["conv_id", "turn_idx"])
     for _, r in evolved.head(50).iterrows():
         assert got_idx.loc[(r["conv_id"], r["turn_idx"]), "tool_version"] == r["tool_version"]
+
+
+def test_mor_epoch_reads_state_twice_and_compacts_past_threshold(
+    spark, tmp_path, monkeypatch
+):
+    """An epoch reads the table state twice (the apply's exactly-once check
+    and the merge's base); the compaction probe counts files from the
+    published commit instead of a third read. Compaction still fires on
+    the epoch that leaves ``compact_threshold + 1`` generations."""
+    from investigraph_etl_spark.lake.log import CommitLog
+
+    calls = []
+    read_state = CommitLog.read_state
+    monkeypatch.setattr(
+        CommitLog, "read_state",
+        lambda self, *a, **k: calls.append(1) or read_state(self, *a, **k),
+    )
+    ev = generate_events(GeneratorConfig(n_events=2000, seed=5, n_epochs=5, n_convs=40))
+    table = LakeTable.create(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
+                             n_buckets=2, mode="mor")
+    table.compact_threshold = 3
+    per_epoch, generations = [], []
+    for epoch, part in ev.groupby("epoch", sort=True):
+        df = spark.createDataFrame(part.drop(columns=["epoch"]))
+        calls.clear()
+        apply_events_batch(table, df, app_id="rs", epoch_id=int(epoch))
+        per_epoch.append(len(calls))
+        generations.append(max(table._files_per_bucket(table._state().live_files).values()))
+    # epoch 3 writes generation 4 = compact_threshold + 1: compacted to one
+    assert generations == [1, 2, 3, 1, 2]
+    assert per_epoch[:3] + per_epoch[4:] == [2, 2, 2, 2]
+    assert per_epoch[3] > 2  # compact() reads the state itself
+    want = replay_oracle(ev.drop(columns=["epoch"]))[PAYLOAD]
+    pd.testing.assert_frame_equal(_final(table), want, check_dtype=False)

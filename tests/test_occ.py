@@ -75,6 +75,19 @@ def test_mor_concurrent_merges_both_land(spark, tmp_path):
     assert a.version == 3  # create + B's merge + A's republished merge
 
 
+def test_raced_mor_merge_counts_the_winners_files_for_compaction(spark, tmp_path):
+    """The compaction probe counts the files of the state A's commit was
+    republished on: B's generation, landed in the same bucket during A's
+    publish, takes the bucket past the threshold and A compacts it."""
+    a, b = _two_handles(spark, str(tmp_path / "t"), "mor", n_buckets=1)
+    a.compact_threshold = 1
+    _inject_before_publish(a, lambda: b.merge(
+        _ev(spark, [_r("insert", "c2", 0, "from-b", 0, 2)]), app_id="b", epoch_id=0))
+    a.merge(_ev(spark, [_r("insert", "c1", 0, "from-a", 0, 1)]), app_id="a", epoch_id=0)
+    assert len(a.files_for()[0]) == 1  # B's file + A's file, compacted to one
+    assert _state(a) == {("c1", 0): "from-a", ("c2", 0): "from-b"}
+
+
 def test_epoch_token_race_skips_and_discards(spark, tmp_path):
     a, b = _two_handles(spark, str(tmp_path / "t"), "mor")
     same = [_r("insert", "c1", 0, "x", 0, 1)]
